@@ -1292,17 +1292,6 @@ def _q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return duplicate_clusters(pairs)
 
 
-def _q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C4-style cross-document span dedup (15-token spans, keep first
-    occurrence, reconstruct surviving text)."""
-    from crawl4ai_spark.operators.dedup import span_dedup
-
-    docs = _read(spark, sf_dir, "documents")
-    return span_dedup(docs, span_tokens=15).select(
-        F.col("id").alias("doc_id"), "dedup_text", "n_spans", "n_spans_kept"
-    )
-
-
 def _q_span_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Span-level dedup battery: the C4 fixed-grid span dedup and the
     Lee-et-al sliding-window exact-substring dedup unioned with a
@@ -3184,41 +3173,6 @@ def _curated_corpus_oracle_sql() -> str:
         SELECT doc_id, ({_NTOK}) AS n_tokens, quality
         FROM surv WHERE doc_id IN (SELECT doc_id FROM firsts)
     """
-
-
-def _pagerank_oracle_sql(iters: int, damping: float) -> str:
-    """Unrolled PageRank over the deterministic doc-link graph
-    (i → (i·131 + k) mod N, k ∈ 1..3), mirroring operators/graph.pagerank
-    including the per-iteration round(·, 9)."""
-    prologue = """
-        WITH edges AS (
-            SELECT doc_id AS src,
-                   (doc_id * 131 + k) % (SELECT count(*) FROM documents) AS dst
-            FROM documents, unnest([1, 2, 3]) AS u(k)),
-        e AS (SELECT DISTINCT src, dst FROM edges WHERE src <> dst),
-        nodes AS (SELECT DISTINCT node FROM
-                  (SELECT src AS node FROM e UNION ALL SELECT dst FROM e)),
-        outdeg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-        r0 AS (SELECT node, round(1.0 / (SELECT count(*) FROM nodes), 9) AS rank
-               FROM nodes)"""
-    its = []
-    for i in range(1, iters + 1):
-        its.append(f"""
-        r{i} AS (
-            SELECT nd.node,
-                   round((SELECT {1.0 - damping} / count(*) FROM nodes)
-                         + {damping} * coalesce(f.inflow, 0.0), 9) AS rank
-            FROM nodes nd LEFT JOIN (
-                SELECT e.dst AS node, sum(r.rank / d.outdeg) AS inflow
-                FROM e JOIN r{i - 1} r ON e.src = r.node
-                       JOIN outdeg d ON e.src = d.src
-                GROUP BY e.dst) f USING (node))""")
-    return (
-        prologue
-        + ","
-        + ",".join(its)
-        + f"\n        SELECT node, round(rank, 6) AS rank FROM r{iters}"
-    )
 
 
 def _link_graph_oracle_sql(iters: int, damping: float) -> str:

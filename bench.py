@@ -284,7 +284,7 @@ def run_scaling_worker(cores: int, pages_path: str) -> dict:
         store_dir,
         CrawlConfig(
             max_depth=1,
-            links_only=True,
+            content_mode="links",
             max_waves=1,
             use_bloom=True,
             n_bloom_shards=32,
@@ -337,7 +337,7 @@ def run_wave_overhead(n_pages: int = 1000, waves: int = 8, cores: int = 8) -> di
         store_dir,
         CrawlConfig(
             max_depth=waves,
-            links_only=True,
+            content_mode="links",
             max_waves=waves,
             use_bloom=True,
             n_bloom_shards=8,

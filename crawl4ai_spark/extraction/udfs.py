@@ -98,12 +98,6 @@ def udf_extract_links(html: pd.Series, url: pd.Series) -> pd.DataFrame:
     return pd.DataFrame({"internal": internal, "external": external})
 
 
-@pandas_udf(MARKDOWN_SCHEMA)
-def udf_markdown(html: pd.Series, url: pd.Series) -> pd.DataFrame:
-    rows = [generate_markdown_result(_decode(h), u or "") for h, u in zip(html, url)]
-    return pd.DataFrame(rows)
-
-
 @pandas_udf(HEAD_SCHEMA)
 def udf_head_meta(html: pd.Series) -> pd.DataFrame:
     rows = []

@@ -1,4 +1,4 @@
-"""The batch-iterated crawl loop — one Spark job per BFS wave.
+"""The batch-iterated crawl loop — one step → commit loop over politeness waves.
 
 Semantics ported from the reference's level-synchronous deep crawl
 (``crawl4ai/deep_crawling/bfs_strategy.py:207-301`` batch BFS,
@@ -7,13 +7,23 @@ max_depth and max-pages capacity trim), re-expressed as the SURVEY.md §3.3
 flagship loop:
 
     while pending:
-        wave    = politeness_rank(pending)          # window per host
-        gated   = robots(wave)                      # broadcast join + UDF
-        fetched = gated ⋈ pages on url              # the "fetch"
-        res     = extract(fetched)                  # Arrow UDFs
-        links   = explode → canonical → first-wins  # discovery
-        fresh   = links ▷ seen                      # bloom + exact anti-join
+        repeat depth_band times:                    # one _step per wave
+            wave    = politeness_rank(pending)      # window per host
+            gated   = robots(wave)                  # broadcast join + UDF
+            fetched = gated ⋈ pages on url          # the "fetch"
+            res     = extract(fetched)              # Arrow UDFs
+            links   = explode → canonical → first-wins  # discovery
+            fresh   = links ▷ seen                  # bloom + exact anti-join
         commit(results, frontier_delta, bloom, host_state, metrics, lineage)
+        state   = reload(store)                     # _load_state
+
+An unbanded crawl is a band of 1, and the band size picks the strategy.
+A band of 1 only persists its frames: the commit's results and
+host_state writes run concurrently with the discover+frontier write, and
+the wave's counts come from the written parquet footers. A band of k > 1
+checkpoints and counts every step, because the next step's pending set,
+budget and host state depend on it, and pays the commit, bloom build,
+metrics, lineage and reload once per band.
 
 Intra-wave order is pinned by the deterministic total key
 (score desc, depth asc, url asc) — the reference's intra-level order is
@@ -29,9 +39,10 @@ frontier's bucketing at cluster scale; AQE handles the local case).
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
+from functools import reduce
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -54,15 +65,6 @@ from crawl4ai_spark.frontier.store import WaveStore
 
 VALID_URL_RE = r"^https?://[^/]*\.[^/]*"
 
-_DEBUG_TIMING = bool(os.environ.get("SPARK_GRAFT_DEBUG_TIMING"))
-
-
-def _tick(label: str, t_prev: float) -> float:
-    now = time.time()
-    if _DEBUG_TIMING:
-        print(f"[wave-timing] {label}: {now - t_prev:.1f}s", flush=True)
-    return now
-
 FRONTIER_COLS = ["url", "url_fp", "host", "depth", "score", "parent_url", "enqueue_wave", "path_key"]
 
 
@@ -74,7 +76,6 @@ class CrawlConfig:
     score_threshold: float | None = None
     default_budget: int = 1_000_000
     include_external: bool = True
-    links_only: bool = True
     # content pipeline per fetched page (reference async_webcrawler.py
     # :783,825-877 default flow):
     #   "links"  — anchors only (cheap frontier expansion; the prefetch
@@ -84,8 +85,7 @@ class CrawlConfig:
     #              → markdown, plus media/tables and scored rich links
     #              (content_source="cleaned_html"); results rows carry
     #              the full CrawlResult surface (models.py:130-164)
-    # None derives from links_only for backward compatibility.
-    content_mode: str | None = None
+    content_mode: str = "links"
     # kwargs for the scrape battery (excluded_tags, css_selector,
     # include_tables, ... — extraction.scrape.scrape_page options)
     scrape_options: dict = field(default_factory=dict)
@@ -149,24 +149,23 @@ class CrawlConfig:
     # URL waits in the frontier (reference fairness re-prioritization,
     # async_dispatcher.py:471-528). None = pure reference-parity order.
     fairness_boost: float | None = None
-    # depth-band wave coalescing for deep-NARROW crawls: run up to this
-    # many politeness waves ("steps") per committed store wave, so the
-    # per-wave fixed overhead (checkpoint commit, bloom build, metrics,
+    # depth-band wave coalescing: the number of politeness waves ("steps")
+    # per committed store wave; 1/None = the band of 1, the default, which
+    # commits every wave. A band of k runs up to k steps before one commit,
+    # so the per-wave fixed overhead (commit, bloom build, metrics,
     # lineage, state reload — ~2.5 s measured, BENCH/WAVE_OVERHEAD.md)
-    # amortizes over the band. Each step is an EXACT politeness wave
-    # (same per-host budget, same rank order, same max_pages cap, same
-    # backoff ticking), so a depth_band=k crawl selects the identical
-    # URL multiset as the unbanded crawl — only the store's wave
-    # numbering coalesces (results/lineage/metrics label every step in a
-    # band with the band's wave index; intra-band order remains fully
-    # determined by the (score desc, depth asc, url asc) key + depth
-    # column). max_waves counts STEPS, not commits — the same selection
-    # budget as the unbanded loop — so the equality also holds when
-    # max_waves truncates the crawl mid-frontier; resume restarts at a
-    # band boundary with the consumed step count reloaded from the
-    # committed markers. Steps keep their narrow work frames persisted
-    # until the band commits, so size bands for narrow waves (the only
-    # shape that needs them); 1/None = commit every wave (default).
+    # amortizes over the band. Every step is an EXACT politeness wave
+    # (same per-host budget, rank order, max_pages cap and backoff tick),
+    # so any band size selects the identical URL multiset; only the store's
+    # wave numbering coalesces (every step in a band is labelled with the
+    # band's wave index; intra-band order stays determined by the
+    # (score desc, depth asc, url asc) key + depth column). max_waves
+    # counts STEPS, not commits, so the equality also holds when max_waves
+    # truncates the crawl mid-frontier; resume restarts at a band boundary
+    # with the step count reloaded from the markers' ``band_steps``. Steps
+    # of k > 1 keep their narrow frames checkpointed until the band
+    # commits, so size bands for the narrow waves of deep-NARROW crawls,
+    # the only shape that needs them.
     depth_band: int | None = None
     # memory-adaptive wave sizing (operators.dispatch
     # .MemoryAdaptiveGovernor) — the Spark analog of the reference's
@@ -186,7 +185,6 @@ class CrawlConfig:
     # frontier prioritization re-expressed as one map-side join.
     host_prior: object | None = None
     host_prior_weight: float = 1.0
-    extra: dict = field(default_factory=dict)
 
 
 def _prepare_seeds(seeds: DataFrame, need_path_keys: bool = False) -> DataFrame:
@@ -462,268 +460,200 @@ def _anti_join_seen(
     return fresh.join(seen_keys, "url_fp", "left_anti")
 
 
-def _banded_loop(
-    spark: SparkSession,
-    store: WaveStore,
-    pool,
+class _State(NamedTuple):
+    """Committed crawl state, read lazily from the store."""
+
+    frontier_all: DataFrame
+    attempted_keys: DataFrame | None  # url_fp of every non-throttled result
+    host_state: DataFrame | None
+    shards: DataFrame | None
+
+
+def _load_state(store: WaveStore, config: CrawlConfig) -> _State:
+    """Reload state from committed storage (metadata-only plans)."""
+    results = store.read_table("results")
+    attempted = results.where(F.col("status") != "throttled") if results is not None else None
+    return _State(
+        store.read_table("frontier_delta"),
+        attempted.select("url_fp") if attempted is not None else None,
+        store.read_latest("host_state"),
+        store.read_table("seen_bloom") if config.use_bloom else None,
+    )
+
+
+@dataclass
+class _Step:
+    """One politeness wave, not yet committed."""
+
+    pending: DataFrame
+    work: DataFrame  # narrow per-URL frame (see _wave_work)
+    fresh: DataFrame  # new frontier rows, already anti-joined against seen
+    host_state: DataFrame  # politeness state after this wave
+    cached: list  # frames to release once the band commits
+    n_selected: int | None = None  # counted eagerly in bands of k > 1 only
+    n_throttled: int | None = None
+
+
+def _stalled(host_state: DataFrame | None, pending: DataFrame) -> bool:
+    """An empty wave means "done" OR "every pending host is in backoff
+    cooldown": stop only when no host is cooling down (cooldown_waves ==
+    -1 retired hosts never come back, so a frontier of only-retired hosts
+    is terminal, matching the reference's give-up-after-max_retries) or
+    nothing is pending. Otherwise the empty wave runs so cooldowns tick."""
+    cooling = (
+        host_state is not None
+        and host_state.where(F.col("cooldown_waves") > 0).limit(1).count() > 0
+    )
+    return not cooling or pending.limit(1).count() == 0
+
+
+def _step(
     config: CrawlConfig,
-    mode: str,
-    pages_slim: DataFrame,
-    has_status: bool,
+    pages: DataFrame,
     robots: DataFrame | None,
     host_budgets: DataFrame | None,
-    summary: dict,
-    frontier_all: DataFrame,
-    attempted_keys: DataFrame | None,
+    state: _State,
+    band: list[_Step],
     host_state: DataFrame | None,
-    shards: DataFrame | None,
     wave: int,
-    total_attempted: int,
-    seed_delta: DataFrame | None,
-) -> tuple[int, int]:
-    """Depth-band coalesced crawl loop (``CrawlConfig.depth_band`` > 1).
+    remaining: int | None,
+    pending_hint: int | None,
+    eager: bool,
+) -> _Step | None:
+    """One politeness wave: rank → robots → fetch → extract → discover →
+    anti-join. ``band`` holds the earlier, uncommitted steps of this band:
+    their discoveries join pending and their attempts leave it.
 
-    The inner loop runs up to ``depth_band`` politeness waves ("steps")
-    against lazily accumulated intra-band state — each step's narrow
-    ``work`` frame and discovery delta stay persisted until the band
-    commits — and the outer loop pays the per-wave fixed overhead
-    (checkpoint commit, bloom build, metrics, lineage, state reload) ONCE
-    per band. Every step applies the identical politeness rank / robots
-    gate / max_pages cap / backoff tick as one unbanded wave, so a banded
-    crawl selects the same URL multiset (tests/test_depth_band.py pins
-    set equality); only the store's wave numbering coalesces. max_waves
-    counts politeness STEPS — the same selection budget as the unbanded
-    loop — so the multiset equality holds even when max_waves truncates
-    the crawl mid-frontier (counting committed bands instead would hand a
-    banded crawl depth_band× the budget; caught by the deep-crawl bench's
-    seen-set assertion). On resume the consumed step count reloads from
-    the committed markers' ``band_steps`` meta (1 per wave for waves
-    committed by the unbanded loop)."""
-    band_steps = int(config.depth_band)
-    steps_done = 0
-    for w in store.committed_waves():
-        steps_done += int(store.marker(w).get("meta", {}).get("band_steps", 1))
-    while steps_done < config.max_waves:
-        t0 = time.time()
-        step_works: list[DataFrame] = []   # persisted; union -> results
-        step_fresh: list[DataFrame] = []   # persisted; union -> frontier delta
-        step_aux: list[DataFrame] = []     # persisted intermediates (top-k input)
-        step_counts: list[tuple[int, int]] = []  # (n_selected, n_throttled)
-        hs_cur = host_state
-        crawl_done = False
-        for _step in range(min(band_steps, config.max_waves - steps_done)):
-            pending = frontier_all.select(*FRONTIER_COLS)
-            for fr in step_fresh:
-                pending = pending.unionByName(fr.select(*FRONTIER_COLS))
-            if attempted_keys is not None:
-                pending = pending.join(attempted_keys, "url_fp", "left_anti")
-            for wk in step_works:
-                pending = pending.join(
-                    wk.where(F.col("status") != "throttled").select("url_fp"),
-                    "url_fp",
-                    "left_anti",
-                )
-            band_attempted = sum(n - t for n, t in step_counts)
-            remaining = None
-            if config.max_pages is not None:
-                remaining = config.max_pages - total_attempted - band_attempted
-                if remaining <= 0:
-                    crawl_done = True
-                    break
-            wave_limit = remaining
-            if config.memory_governor is not None:
-                pct = config.memory_governor.wait_if_critical(spark)
-                cap = config.memory_governor.next_wave_cap(pct)
-                wave_limit = cap if wave_limit is None else min(wave_limit, cap)
-            if config.strategy == "dfs":
-                order = dfs_order()
-            elif config.fairness_boost is not None:
-                order = fair_wave_order(wave, config.fairness_boost)
-            else:
-                order = None
-            ranked = rank_by_host_budget(
-                pending,
-                host_budgets,
-                config.default_budget,
-                host_state=hs_cur,
-                global_limit=wave_limit,
-                order=order,
-                salt_partitions=config.salt_partitions,
-            )
-            wave_sel = ranked.where(F.col("selected")).drop("selected")
-            wave_sel = attach_robots_verdict(wave_sel, robots, config.user_agent)
-            fetched = wave_sel.join(pages_slim, "url", "left")
-            throttle_cond = (
-                F.col("status_code").isin(429, 503) if has_status else F.lit(False)
-            )
-            if config.detect_blocked:
-                throttle_cond = throttle_cond | blocked_reason_col(
-                    F.col("status_code") if has_status else F.lit(None).cast("int"),
-                    F.col("html"),
-                ).isNotNull()
-            fetched = fetched.withColumn(
-                "status",
-                F.when(~F.col("robots_allowed"), F.lit("robots_denied"))
-                .when(F.col("html").isNull(), F.lit("missing"))
-                .when(throttle_cond, F.lit("throttled"))
-                .otherwise(F.lit("fetched")),
-            )
-            if has_status:
-                fetched = fetched.drop("status_code")
-            # localCheckpoint (eager), not persist: each step's plan embeds
-            # the previous steps' pending/host-state plans, so without a
-            # LOGICAL lineage cut the band's plan tree doubles per step
-            # (measured: a 2 GiB plan string by wave ~10). The checkpoint
-            # materializes the same narrow frame the unbanded loop persists
-            # and replaces its plan with the stored blocks.
-            work = _wave_work(fetched, mode, config).localCheckpoint()
-            cnt = work.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    F.when(F.col("status") == "throttled", 1).otherwise(0)
-                ).alias("t"),
-            ).collect()[0]
-            n_sel, n_thr = int(cnt["n"]), int(cnt["t"] or 0)
-            if n_sel == 0:
-                # same terminal logic as the unbanded loop, on the
-                # PRE-step host state: stop unless a host is cooling down
-                # and rows remain pending (then the empty step still ticks
-                # cooldowns below, like the unbanded empty-wave commit)
-                cooling = (
-                    hs_cur is not None
-                    and hs_cur.where(F.col("cooldown_waves") > 0).limit(1).count() > 0
-                )
-                if not cooling or pending.limit(1).count() == 0:
-                    work.unpersist()
-                    crawl_done = True
-                    break
-            step_works.append(work)
-            step_counts.append((n_sel, n_thr))
-            steps_done += 1
-            outcomes = work.groupBy("host").agg(
-                F.sum(F.when(F.col("status") == "fetched", 1).otherwise(0)).alias("n_ok"),
-                F.sum(F.when(F.col("status") == "throttled", 1).otherwise(0)).alias(
-                    "n_throttled"
-                ),
-            )
-            # the host-state chain is re-broadcast by every later step's
-            # rank — checkpoint it too (tiny frame, one cheap job) so the
-            # chain stays O(1) plan depth
-            hs_cur = update_host_state(hs_cur, outcomes).localCheckpoint()
-            fresh = _discover(work.where(F.col("status") == "fetched"), wave, config, mode)
-            fresh = _anti_join_seen(fresh, frontier_all.select("url_fp"), shards, config)
-            for fr in step_fresh:
-                # the bloom shards cover only COMMITTED state — intra-band
-                # discoveries dedup exactly against the band's own deltas
-                # (tiny persisted frames, plain anti-joins)
-                fresh = fresh.join(fr.select("url_fp"), "url_fp", "left_anti")
-            if config.max_pages is not None:
-                cand = fresh.localCheckpoint()
-                step_aux.append(cand)
-                fresh = (
-                    flag_global_top_k(
-                        cand, wave_order(), max(remaining, 0), n_rows=cand.count()
-                    )
-                    .where(F.col("_topk"))
-                    .drop("_topk")
-                )
-            # eager checkpoint: later steps' pending must not replay (or
-            # even re-plan) the discover chain
-            fresh = fresh.localCheckpoint()
-            step_fresh.append(fresh)
+    ``eager`` (bands of k > 1) checkpoints every frame and counts the step,
+    because the next step's pending, budget and host-state plans embed this
+    one; returns None when that count shows the crawl has stalled. A band
+    of 1 only persists: its commit writes are the first jobs to touch the
+    frames, and the counts come from the written files."""
+    pending = state.frontier_all.select(*FRONTIER_COLS)
+    for s in band:
+        pending = pending.unionByName(s.fresh.select(*FRONTIER_COLS))
+    if state.attempted_keys is not None:
+        pending = pending.join(state.attempted_keys, "url_fp", "left_anti")
+    for s in band:
+        done = s.work.where(F.col("status") != "throttled").select("url_fp")
+        pending = pending.join(done, "url_fp", "left_anti")
 
-        n_selected = sum(n for n, _ in step_counts)
-        n_throttled = sum(t for _, t in step_counts)
-        if not step_works:
-            # terminal before any step ran — nothing to commit
-            break
+    # memory-adaptive wave sizing: wait out critical pressure, then cap
+    # this wave's global selection. A capped wave never drops URLs
+    # (unselected rows stay pending), so only the wave schedule changes,
+    # not the crawl's final URL-seen set.
+    wave_limit = remaining
+    if config.memory_governor is not None:
+        pct = config.memory_governor.wait_if_critical(pages.sparkSession)
+        cap = config.memory_governor.next_wave_cap(pct)
+        wave_limit = cap if wave_limit is None else min(wave_limit, cap)
 
-        results = None
-        for wk in step_works:
-            r = _result_rows(wk, wave, mode)
-            results = r if results is None else results.unionByName(r)
-        frontier_delta = None
-        for fr in step_fresh:
-            frontier_delta = (
-                fr if frontier_delta is None else frontier_delta.unionByName(fr)
-            )
-        if seed_delta is not None:
-            frontier_delta = (
-                seed_delta
-                if frontier_delta is None
-                else seed_delta.unionByName(frontier_delta)
-            )
-        if frontier_delta is None:
-            frontier_delta = frontier_all.limit(0)
+    if config.strategy == "dfs":
+        order = dfs_order()
+    elif config.fairness_boost is not None:
+        order = fair_wave_order(wave, config.fairness_boost)
+    else:
+        order = None
+    ranked = rank_by_host_budget(
+        pending,
+        host_budgets,
+        config.default_budget,
+        host_state=host_state,
+        global_limit=wave_limit,
+        order=order,
+        salt_partitions=config.salt_partitions,
+        pending_hint=pending_hint,
+    )
+    wave_sel = ranked.where(F.col("selected")).drop("selected")
+    wave_sel = attach_robots_verdict(wave_sel, robots, config.user_agent)
+    fetched = wave_sel.join(pages, "url", "left")
+    # optional status_code column drives the throttle path (429/503 →
+    # backoff; absent → every present page fetches)
+    has_status = "status_code" in pages.columns
+    throttle_cond = F.col("status_code").isin(429, 503) if has_status else F.lit(False)
+    if config.detect_blocked:
+        throttle_cond = throttle_cond | blocked_reason_col(
+            F.col("status_code") if has_status else F.lit(None).cast("int"),
+            F.col("html"),
+        ).isNotNull()
+    fetched = fetched.withColumn(
+        "status",
+        F.when(~F.col("robots_allowed"), F.lit("robots_denied"))
+        .when(F.col("html").isNull(), F.lit("missing"))
+        .when(throttle_cond, F.lit("throttled"))
+        .otherwise(F.lit("fetched")),
+    )
+    if has_status:
+        fetched = fetched.drop("status_code")
 
-        f_results = pool.submit(store.write_table, "results", wave, results)
-        f_host = pool.submit(store.write_table, "host_state", wave, hs_cur)
-        frontier_written = store.write_table("frontier_delta", wave, frontier_delta)
-        n_fresh = store.pending_count(wave, "frontier_delta")
-        f_results.result()
-        f_host.result()
-        f_bloom = None
-        if config.use_bloom:
-            f_bloom = pool.submit(
-                store.write_table,
-                "seen_bloom",
-                wave,
-                build_bloom_shards(
-                    frontier_written, config.n_bloom_shards, config.bloom_fpp
-                ),
-            )
-        store.write_lineage(wave, "results")
-        # band counts are already exact driver-side ints — one literal row
-        metrics = spark.createDataFrame(
-            [
-                (
-                    wave,
-                    n_selected - n_throttled,
-                    n_throttled,
-                    n_fresh,
-                    time.time() - t0,
-                )
-            ],
-            "wave long, n_attempted long, n_throttled long, n_new_frontier long, wall_sec double",
+    # one pass over html, then everything runs off this narrow frame.
+    # localCheckpoint (eager), not persist, inside a band: each step's
+    # plan embeds the previous steps' pending/host-state plans, so without
+    # a LOGICAL lineage cut the band's plan tree doubles per step
+    # (measured: a 2 GiB plan string by wave ~10).
+    work = _wave_work(fetched, config.content_mode, config)
+    work = work.localCheckpoint() if eager else work.persist()
+    cached = [work]
+    n_selected = n_throttled = None
+    if eager:
+        cnt = work.agg(
+            F.count("*").alias("n"),
+            F.sum(F.when(F.col("status") == "throttled", 1).otherwise(0)).alias("t"),
+        ).collect()[0]
+        n_selected, n_throttled = int(cnt["n"]), int(cnt["t"] or 0)
+        if n_selected == 0 and _stalled(host_state, pending):
+            work.unpersist()
+            return None
+
+    outcomes = work.groupBy("host").agg(
+        F.sum(F.when(F.col("status") == "fetched", 1).otherwise(0)).alias("n_ok"),
+        # 429/503-equivalents: drive the RateLimiter backoff state machine
+        F.sum(F.when(F.col("status") == "throttled", 1).otherwise(0)).alias("n_throttled"),
+    )
+    host_state = update_host_state(host_state, outcomes)
+    if eager:
+        # re-broadcast by every later step's rank: a tiny frame, one cheap
+        # job, and the chain stays O(1) plan depth
+        host_state = host_state.localCheckpoint()
+
+    fresh = _discover(
+        work.where(F.col("status") == "fetched"), wave, config, config.content_mode
+    )
+    fresh = _anti_join_seen(fresh, state.frontier_all.select("url_fp"), state.shards, config)
+    for s in band:
+        # the bloom shards cover only COMMITTED state — intra-band
+        # discoveries dedup exactly against the band's own deltas
+        fresh = fresh.join(s.fresh.select("url_fp"), "url_fp", "left_anti")
+    if remaining is not None:
+        # tiered global top-k (see flag_global_top_k): the narrow discovery
+        # frame is cached so the elision count and the frontier write share
+        # one computation of discover+anti-join
+        cand = fresh.localCheckpoint() if eager else fresh.persist()
+        cached.append(cand)
+        fresh = (
+            flag_global_top_k(cand, wave_order(), max(remaining, 0), n_rows=cand.count())
+            .where(F.col("_topk"))
+            .drop("_topk")
         )
-        store.write_table("metrics", wave, metrics)
-        if f_bloom is not None:
-            f_bloom.result()
-        marker = store.commit(
-            wave, meta={"config": str(config), "band_steps": len(step_counts)}
-        )
-        summary["waves"].append(
-            marker["counts"] | {"wave": wave, "band_steps": len(step_counts)}
-        )
+    if eager:
+        # later steps' pending must not replay (or even re-plan) discovery
+        fresh = fresh.localCheckpoint()
+        cached.append(fresh)
+    return _Step(pending, work, fresh, host_state, cached, n_selected, n_throttled)
 
-        for wk in step_works:
-            wk.unpersist()
-        for fr in step_fresh:
-            fr.unpersist()
-        for aux in step_aux:
-            aux.unpersist()
-        if seed_delta is not None:
-            seed_delta.unpersist()
-            seed_delta = None
 
-        total_attempted += n_selected - n_throttled
-        wave += 1
-        if crawl_done:
-            break
-
-        if config.compact_every and wave % config.compact_every == 0:
-            committed_now = store.committed_waves()
-            for t in ("frontier_delta", "results", "seen_bloom"):
-                if any(store.marker(w)["counts"].get(t, 0) > 0 for w in committed_now):
-                    store.compact(t)
-
-        frontier_all = store.read_table("frontier_delta")
-        results_all = store.read_table("results")
-        attempted_keys = results_all.where(F.col("status") != "throttled").select("url_fp")
-        host_state = store.read_latest("host_state")
-        shards = store.read_table("seen_bloom") if config.use_bloom else None
-
-    return wave, total_attempted
+def _compact(store: WaveStore, tables: tuple[str, ...], vacuum: bool = False) -> dict:
+    """Fold each of ``tables`` that holds rows into one snapshot; returns
+    the folded row count per table. Existence comes from the commit
+    markers (driver-side, no Spark reader per table)."""
+    committed = store.committed_waves()
+    folded = {}
+    for t in tables:
+        if any(store.marker(w)["counts"].get(t, 0) > 0 for w in committed):
+            folded[t] = store.compact(t)["rows"]
+            if vacuum:
+                store.vacuum(t)
+    return folded
 
 
 def run_crawl(
@@ -737,7 +667,7 @@ def run_crawl(
 ) -> dict:
     """Run (or resume) a crawl to completion. Returns a summary dict."""
     config = config or CrawlConfig()
-    mode = config.content_mode or ("links" if config.links_only else "full")
+    mode = config.content_mode
     if mode not in ("links", "full", "scrape"):
         raise ValueError(f"unknown content_mode {mode!r}")
     if config.score_from_links and mode != "scrape":
@@ -749,40 +679,27 @@ def run_crawl(
         )
     store = WaveStore(spark, store_dir)
     store.recover()  # drop stale staging dirs from a killed run
-    # optional status_code column drives the throttle path (429/503 →
-    # backoff; absent → every present page fetches)
-    has_status = "status_code" in pages.columns
-    if has_status:
-        pages_slim = pages.select("url", "html", "status_code")
-    else:
-        pages_slim = pages.select("url", "html")
+    pages = pages.select(
+        "url", "html", *(["status_code"] if "status_code" in pages.columns else [])
+    )
+    band_size = max(config.depth_band or 1, 1)
+    eager = band_size > 1
 
     last = store.last_wave()
     if last is None:
         # persisted: wave 0 reuses the seed frontier three times (politeness
         # pending, seen anti-join, frontier_delta union)
-        seeds_frontier = _prepare_seeds(seeds, need_path_keys=(config.strategy == "dfs")).persist()
-        frontier_all = seeds_frontier
-        attempted_keys = None  # throttled rows never enter this set
-        host_state = None
-        shards = None
-        wave = 0
-        total_attempted = 0
-        seed_delta = seeds_frontier  # committed with wave 0
+        seed_delta = _prepare_seeds(seeds, need_path_keys=(config.strategy == "dfs")).persist()
+        state = _State(seed_delta, None, None, None)
+        wave = steps_done = total_attempted = 0
         frontier_total = None  # unknown until the first footer count lands
     else:
-        frontier_all = store.read_table("frontier_delta")
-        results_all = store.read_table("results")
-        attempted = (
-            results_all.where(F.col("status") != "throttled")
-            if results_all is not None
-            else None
-        )
-        attempted_keys = attempted.select("url_fp") if attempted is not None else None
-        host_state = store.read_latest("host_state")
-        shards = store.read_table("seen_bloom") if config.use_bloom else None
+        state = _load_state(store, config)
         wave = last + 1
         committed = store.committed_waves()
+        steps_done = sum(
+            int(store.marker(w).get("meta", {}).get("band_steps", 1)) for w in committed
+        )
         scalars = (
             [store.read_scalar("metrics", w, "n_attempted") for w in committed]
             if all("metrics" in store.marker(w)["tables"] for w in committed)
@@ -791,7 +708,8 @@ def run_crawl(
         if any(s is None for s in scalars):
             # a wave's metrics dir is gone (compacted+vacuumed store) or a
             # wave predates the metrics table — recount, never assume 0
-            total_attempted = attempted.count() if attempted is not None else 0
+            keys = state.attempted_keys
+            total_attempted = keys.count() if keys is not None else 0
         else:
             # per-wave n_attempted scalars from the metrics deltas —
             # driver-side pyarrow reads, no Spark job on resume
@@ -806,157 +724,75 @@ def run_crawl(
     from concurrent.futures import ThreadPoolExecutor
 
     pool = ThreadPoolExecutor(max_workers=2, thread_name_prefix="wave-writer")
-    if (config.depth_band or 1) > 1:
-        try:
-            wave, total_attempted = _banded_loop(
-                spark, store, pool, config, mode, pages_slim, has_status,
-                robots, host_budgets, summary,
-                frontier_all, attempted_keys, host_state, shards,
-                wave, total_attempted, seed_delta,
-            )
-        finally:
-            pool.shutdown(wait=True)
-        return _finish_summary(store, config, summary, total_attempted, wave)
     try:
-        while wave < config.max_waves:
+        while steps_done < config.max_waves:
+            if state is None:
+                state = _load_state(store, config)
             t0 = time.time()
-            pending = frontier_all.select(*FRONTIER_COLS)
-            if attempted_keys is not None:
-                pending = pending.join(attempted_keys, "url_fp", "left_anti")
-
-            remaining = None
-            if config.max_pages is not None:
-                remaining = config.max_pages - total_attempted
-                if remaining <= 0:
-                    break
-
-            # memory-adaptive wave sizing: wait out critical pressure,
-            # then cap this wave's global selection. A capped wave never
-            # drops URLs (unselected rows stay pending), so only the wave
-            # schedule changes, not the crawl's final URL-seen set.
-            wave_limit = remaining
-            if config.memory_governor is not None:
-                pct = config.memory_governor.wait_if_critical(spark)
-                cap = config.memory_governor.next_wave_cap(pct)
-                wave_limit = cap if wave_limit is None else min(wave_limit, cap)
-
-            if config.strategy == "dfs":
-                order = dfs_order()
-            elif config.fairness_boost is not None:
-                order = fair_wave_order(wave, config.fairness_boost)
-            else:
-                order = None
-            ranked = rank_by_host_budget(
-                pending,
-                host_budgets,
-                config.default_budget,
-                host_state=host_state,
-                global_limit=wave_limit,
-                order=order,
-                salt_partitions=config.salt_partitions,
+            band: list[_Step] = []
+            host_state = state.host_state
+            crawl_done = False
+            while len(band) < min(band_size, config.max_waves - steps_done):
+                remaining = None
+                if config.max_pages is not None:
+                    remaining = config.max_pages - total_attempted - sum(
+                        s.n_selected - s.n_throttled for s in band
+                    )
+                    if remaining <= 0:
+                        crawl_done = True
+                        break
                 # |pending| from accumulated footer counts (attempted ⊆
-                # frontier, both unique by url_fp) — lets the global cap elide
-                # its windows entirely once pending fits the remaining budget
-                pending_hint=(
-                    frontier_total - total_attempted if frontier_total is not None else None
-                ),
-            )
-            wave_sel = ranked.where(F.col("selected")).drop("selected")
-            wave_sel = attach_robots_verdict(wave_sel, robots, config.user_agent)
-            fetched = wave_sel.join(pages_slim, "url", "left")
-            throttle_cond = (
-                F.col("status_code").isin(429, 503)
-                if has_status
-                else F.lit(False)
-            )
-            if config.detect_blocked:
-                throttle_cond = throttle_cond | blocked_reason_col(
-                    F.col("status_code") if has_status else F.lit(None).cast("int"),
-                    F.col("html"),
-                ).isNotNull()
-            fetched = fetched.withColumn(
-                "status",
-                F.when(~F.col("robots_allowed"), F.lit("robots_denied"))
-                .when(F.col("html").isNull(), F.lit("missing"))
-                .when(throttle_cond, F.lit("throttled"))
-                .otherwise(F.lit("fetched")),
-            )
-            if has_status:
-                fetched = fetched.drop("status_code")
-            # one pass over html, then everything runs off this narrow cache
-            work = _wave_work(fetched, mode, config).persist()
-
-            t_phase = time.time()
-            results = _result_rows(work, wave, mode)
-            outcomes = (
-                work.groupBy("host")
-                .agg(
-                    F.sum(F.when(F.col("status") == "fetched", 1).otherwise(0)).alias("n_ok"),
-                    # 429/503-equivalents from the pages table's status_code
-                    # column (0 everywhere when the column is absent) — drives
-                    # the RateLimiter backoff state machine per wave
-                    F.sum(F.when(F.col("status") == "throttled", 1).otherwise(0)).alias("n_throttled"),
+                # frontier, both unique by url_fp) — exact before a band's
+                # first step; lets the global cap elide its windows once
+                # pending fits the remaining budget
+                exact = frontier_total is not None and not band
+                hint = frontier_total - total_attempted if exact else None
+                step = _step(
+                    config, pages, robots, host_budgets, state, band, host_state,
+                    wave, remaining, hint, eager,
                 )
+                if step is None:
+                    crawl_done = True
+                    break
+                band.append(step)
+                host_state = step.host_state
+            if not band:
+                break
+
+            results = reduce(
+                DataFrame.unionByName, [_result_rows(s.work, wave, mode) for s in band]
             )
-            # results and host_state depend only on the persisted `work`
-            # frame and on nothing downstream — submit their write jobs from
-            # driver threads so they overlap the discover+frontier job: the
-            # wave's fixed cost is max(), not sum(), of the three (first
-            # touch of a `work` block is serialized by BlockManager's
-            # per-block locks, so the cache is still computed once)
+            frontier_delta = reduce(
+                DataFrame.unionByName,
+                ([seed_delta] if seed_delta is not None else []) + [s.fresh for s in band],
+            )
+            # results and host_state depend only on the step frames: their
+            # writes run in driver threads, overlapping the discover+frontier
+            # job, so the wave costs max(), not sum(), of the three (per-block
+            # locks still compute a band-of-1 `work` block once)
             f_results = pool.submit(store.write_table, "results", wave, results)
-            f_host = pool.submit(
-                store.write_table, "host_state", wave, update_host_state(host_state, outcomes)
-            )
-
-            fresh = _discover(work.where(F.col("status") == "fetched"), wave, config, mode)
-            fresh = _anti_join_seen(fresh, frontier_all.select("url_fp"), shards, config)
-
-            fresh_cached = None
-            if config.max_pages is not None:
-                # tiered global top-k (see flag_global_top_k): the narrow
-                # discovery frame is persisted so the elision count and the
-                # frontier write share one computation of discover+anti-join
-                fresh_cached = fresh.persist()
-                fresh = flag_global_top_k(
-                    fresh_cached,
-                    wave_order(),
-                    max(config.max_pages - total_attempted, 0),
-                    n_rows=fresh_cached.count(),
-                )
-                fresh = fresh.where(F.col("_topk")).drop("_topk")
-
-            frontier_delta = fresh if seed_delta is None else seed_delta.unionByName(fresh)
+            f_host = pool.submit(store.write_table, "host_state", wave, host_state)
             frontier_written = store.write_table("frontier_delta", wave, frontier_delta)
             n_fresh = store.pending_count(wave, "frontier_delta")
             f_results.result()
-            host_state_written = f_host.result()
+            f_host.result()
             n_selected = store.pending_count(wave, "results")
-            t_phase = _tick("results+frontier+host_state (3 concurrent jobs)", t_phase)
-            if n_selected == 0:
-                # An empty wave can mean "done" OR "every pending host is in
-                # backoff cooldown" — only stop when no host is cooling down
-                # (cooldown_waves == -1 retired hosts never come back, so a
-                # frontier of only-retired hosts is terminal, matching the
-                # reference's give-up-after-max_retries). Otherwise fall
-                # through and commit the empty wave so cooldowns tick down.
-                # (The empty wave's discover ran above — over zero fetched
-                # rows — and its staged, uncommitted dirs are reclaimed by
-                # the next run's recover().)
-                cooling = (
-                    host_state is not None
-                    and host_state.where(F.col("cooldown_waves") > 0).limit(1).count() > 0
-                )
-                if not cooling or pending.limit(1).count() == 0:
-                    work.unpersist()
-                    if fresh_cached is not None:
-                        fresh_cached.unpersist()
+            if eager:
+                n_throttled = sum(s.n_throttled for s in band)
+            else:
+                # this wave's throttle count, summed driver-side from the
+                # written host_state bytes — no count job
+                n_throttled = sum(store.read_column("host_state", wave, "wave_throttled"))
+                if n_selected == 0 and _stalled(state.host_state, band[0].pending):
+                    # the staged, uncommitted dirs are reclaimed by the
+                    # next run's recover()
+                    for c in band[0].cached:
+                        c.unpersist()
                     break
 
             # bloom shards depend only on the already-written frontier
             # bytes — submit the build+write from the pool so it overlaps
             # the (driver-side) lineage footer pass AND the metrics job
-            # below; both tails were pure serial overhead per wave
             f_bloom = None
             if config.use_bloom:
                 f_bloom = pool.submit(
@@ -968,86 +804,57 @@ def run_crawl(
             # lineage derives from the already-written parquet footers,
             # driver-side (store.write_lineage) — zero Spark jobs
             store.write_lineage(wave, "results")
-            t_phase = _tick("lineage", t_phase)
-            # throttle count folded into the metrics job: summed from the
-            # already-written host_state bytes (the per-wave results-table
-            # count() job this replaces was pure overhead), then read back
-            # driver-side from the single-row metrics parquet — no extra job
-            metrics = host_state_written.agg(
-                F.coalesce(F.sum("wave_throttled"), F.lit(0)).alias("n_throttled")
-            ).select(
+            # throttled rows are recorded but NOT attempted: they stay
+            # pending (retried after the host cooldown) and don't burn
+            # max_pages
+            n_attempted = n_selected - n_throttled
+            # one row of literals: a JVM-only job (createDataFrame would
+            # ship the row through a Python worker, ~0.3 s per wave)
+            metrics = spark.range(1, numPartitions=1).select(
                 F.lit(wave).cast("long").alias("wave"),
-                (F.lit(n_selected) - F.col("n_throttled")).alias("n_attempted"),
-                F.col("n_throttled"),
+                F.lit(n_attempted).cast("long").alias("n_attempted"),
+                F.lit(n_throttled).cast("long").alias("n_throttled"),
                 F.lit(n_fresh).cast("long").alias("n_new_frontier"),
                 F.lit(time.time() - t0).alias("wall_sec"),
             )
             store.write_table("metrics", wave, metrics)
             if f_bloom is not None:
                 f_bloom.result()
-                t_phase = _tick("bloom+metrics (overlapped)", t_phase)
-            # throttled rows are recorded but NOT attempted: they stay pending
-            # (retried after the host cooldown) and don't burn max_pages
-            n_throttled_rows = (
-                int(store.read_scalar("metrics", wave, "n_throttled") or 0)
-                if has_status
-                else 0
-            )
-            marker = store.commit(wave, meta={"config": str(config)})
-            summary["waves"].append(marker["counts"] | {"wave": wave})
+            marker = store.commit(wave, meta={"config": str(config), "band_steps": len(band)})
+            summary["waves"].append(marker["counts"] | {"wave": wave, "band_steps": len(band)})
 
-            work.unpersist()
-            if fresh_cached is not None:
-                fresh_cached.unpersist()
+            for s in band:
+                for c in s.cached:
+                    c.unpersist()
             if seed_delta is not None:
                 seed_delta.unpersist()
-
-            # periodic fold of the in-loop-read delta tables so the state
-            # reload below stays O(compact_every) dirs instead of O(waves)
-            # (see CrawlConfig.compact_every; safe here: every live frame
-            # is re-derived from store reads right after, and folded wave
-            # dirs are left on disk — no mid-crawl vacuum)
-            if config.compact_every and (wave + 1) % config.compact_every == 0:
-                committed_now = store.committed_waves()
-                for t in ("frontier_delta", "results", "seen_bloom"):
-                    if any(store.marker(w)["counts"].get(t, 0) > 0 for w in committed_now):
-                        store.compact(t)
-
-            # reload state from committed storage (cheap: metadata-only plans)
-            frontier_all = store.read_table("frontier_delta")
-            results_all = store.read_table("results")
-            attempted_keys = results_all.where(F.col("status") != "throttled").select("url_fp")
-            host_state = store.read_latest("host_state")
-            shards = store.read_table("seen_bloom") if config.use_bloom else None
-            total_attempted += n_selected - n_throttled_rows
+                seed_delta = None
+            total_attempted += n_attempted
             frontier_total = (frontier_total or 0) + n_fresh
+            steps_done += len(band)
             wave += 1
-            seed_delta = None
-
+            if crawl_done:
+                break
+            # periodic fold of the in-loop-read delta tables so the state
+            # reload stays O(compact_every) dirs instead of O(waves) (see
+            # CrawlConfig.compact_every; safe here: every live frame is
+            # re-derived from store reads, and folded wave dirs are left on
+            # disk — no mid-crawl vacuum)
+            if config.compact_every and wave % config.compact_every == 0:
+                _compact(store, ("frontier_delta", "results", "seen_bloom"))
+            state = None
     finally:
         # always drain the writer threads — an exception raised between
         # submit and result must not leave write jobs running against a
         # session the caller is about to stop
         pool.shutdown(wait=True)
-    return _finish_summary(store, config, summary, total_attempted, wave)
 
-
-def _finish_summary(
-    store: WaveStore, config: CrawlConfig, summary: dict, total_attempted: int, wave: int
-) -> dict:
     summary["total_attempted"] = total_attempted
     summary["final_wave"] = wave - 1
     if config.compact_on_finish:
-        compacted: dict[str, int] = {}
-        committed_now = store.committed_waves()
         # delta-style tables only — host_state is snapshot-style (its
-        # per-wave dirs ARE the history read_latest walks). Existence
-        # check from the commit markers (driver-side, no Spark reader
-        # construction per table).
-        for t in ("results", "frontier_delta", "seen_bloom", "metrics", "lineage"):
-            if any(store.marker(w)["counts"].get(t, 0) > 0 for w in committed_now):
-                m = store.compact(t)
-                store.vacuum(t)
-                compacted[t] = m["rows"]
-        summary["compacted"] = compacted
+        # per-wave dirs ARE the history read_latest walks)
+        summary["compacted"] = _compact(
+            store, ("results", "frontier_delta", "seen_bloom", "metrics", "lineage"), vacuum=True
+        )
     return summary

@@ -155,13 +155,11 @@ class WaveStore:
     def pending_count(self, wave: int, name: str) -> int:
         return self._pending.get(wave, {}).get(name, 0)
 
-    def read_scalar(self, name: str, wave: int, column: str):
-        """Driver-side read of a single-column value from a tiny written
-        table (e.g. the one-row metrics delta) — pyarrow, no Spark job.
-        Reads staging before commit, the final path after. Returns the
-        first non-null value, or None if the table is empty — or if the
-        per-wave dir no longer exists (vacuumed after compaction; callers
-        must treat None as "recompute", not zero)."""
+    def read_column(self, name: str, wave: int, column: str) -> list | None:
+        """Driver-side read of one column of a small written wave table
+        (e.g. the per-host host_state snapshot) — pyarrow, no Spark job.
+        Reads staging before commit, the final path after. None if the
+        per-wave dir no longer exists (vacuumed after compaction)."""
         import pyarrow.parquet as pq
 
         path = self._staging_path(name, wave)
@@ -169,13 +167,19 @@ class WaveStore:
             path = self._table_path(name, wave)
         if not os.path.exists(path):
             return None
-        for fname in sorted(os.listdir(path)):
-            if fname.endswith(".parquet"):
-                col = pq.read_table(os.path.join(path, fname), columns=[column])[column]
-                for v in col.to_pylist():
-                    if v is not None:
-                        return v
-        return None
+        return [
+            v
+            for fname in sorted(os.listdir(path))
+            if fname.endswith(".parquet")
+            for v in pq.read_table(os.path.join(path, fname), columns=[column])[column].to_pylist()
+        ]
+
+    def read_scalar(self, name: str, wave: int, column: str):
+        """The first non-null value of ``read_column`` (e.g. from the
+        one-row metrics delta), or None if the table is empty — or if the
+        per-wave dir no longer exists (callers must treat None as
+        "recompute", not zero)."""
+        return next((v for v in self.read_column(name, wave, column) or () if v is not None), None)
 
     def commit(self, wave: int, meta: dict | None = None) -> dict:
         """Atomically publish all tables written for this wave: rename

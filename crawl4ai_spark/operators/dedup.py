@@ -56,21 +56,6 @@ def dedup_keep_first(docs: DataFrame, id_col: str = "doc_id", text_col: str = "t
 # ── shingles ─────────────────────────────────────────────────────────────
 
 
-def shingles_col(text_col, n: int = 3):
-    """Word n-gram shingles as strings (distinct per doc).
-
-    NOTE (perf): Catalyst does not CSE across higher-order-function
-    lambdas, so ``slice(toks, ...)`` here would re-evaluate the whole
-    tokenization regex per shingle if ``toks`` is an expression. Only use
-    this on small inputs / when an array column is genuinely needed; the
-    shingle operators below use the explode+lead row pipeline instead.
-    """
-    toks = clean_terms_col(text_col)
-    idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
-    grams = F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)))
-    return F.array_distinct(F.when(F.size(toks) >= n, grams).otherwise(F.array().cast("array<string>")))
-
-
 def kgram_rows(docs: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     """(doc_id, pos, gram) — one row per positioned word-n-gram: the
     shared front end of every shingle-family operator (MinHash / Jaccard

@@ -29,10 +29,6 @@ def _path_col(url_col: Column) -> Column:
     return F.coalesce(F.parse_url(url_col, F.lit("PATH")), F.lit(""))
 
 
-def _java_quote(literal: str) -> str:
-    return re.escape(literal)
-
-
 def compile_pattern_filter(patterns: list[str], reverse: bool = False):
     """Glob pattern filter → Column predicate factory.
 

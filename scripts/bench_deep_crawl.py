@@ -51,7 +51,7 @@ def run_leg(spark, pages_path, name: str, **cfg) -> dict:
         store_dir,
         CrawlConfig(
             max_depth=WAVES,
-            links_only=True,
+            content_mode="links",
             max_waves=WAVES,
             use_bloom=True,
             n_bloom_shards=8,
@@ -123,11 +123,11 @@ def main() -> int:
     with open(md, "w") as fh:
         fh.write(
             "# Deep-crawl wave-cost growth: `compact_every` and `depth_band`\n\n"
-            f"A {WAVES}-wave, budget-1 crawl over {N_PAGES:,} pages (local[{CORES}],\n"
-            "the deep-narrow shape) measures how per-wave cost grows with wave\n"
-            "count: every wave reloads crawl state as a union read over all\n"
-            "committed wave dirs, so the plan/listing cost is O(waves) per wave —\n"
-            "O(N²) over a crawl — unless the deltas are folded; and every wave\n"
+            f"A {WAVES}-wave, budget-1 crawl over {N_PAGES:,} pages (local[{CORES}]\n"
+            f"on a {os.cpu_count()}-CPU host, the deep-narrow shape) measures how\n"
+            "per-wave cost grows with wave count: every wave reloads crawl state\n"
+            "as a union read over all committed wave dirs, so the plan/listing\n"
+            "cost is O(waves) per wave — O(N²) over a crawl — unless the deltas are folded; and every wave\n"
             "pays the fixed driver/commit constant (BENCH/WAVE_OVERHEAD.md)\n"
             "regardless of how few URLs it carries.\n\n"
             "All four legs finish the IDENTICAL URL-seen set (asserted by the\n"
@@ -151,14 +151,14 @@ def main() -> int:
             "BAND — so the fixed per-wave constant is paid "
             f"{plain['n_committed_waves']}→{band['n_committed_waves']} times and\n"
             f"the scenario's wall drops {band_speedup:.2f}× with a byte-identical\n"
-            f"crawl result. Composing both ({both_speedup:.2f}×) is SLOWER than\n"
+            f"crawl result. Composing both ({both_speedup:.2f}×) is "
+            f"{'slower than' if both_speedup < band_speedup else 'about as fast as'}\n"
             f"banding alone at this depth: with only {both['n_committed_waves']}\n"
             "committed waves, each fold rewrites a band-sized (4×-larger)\n"
-            "snapshot and the fold-wave spikes outweigh the avoided state reads\n"
-            "— compose them only when the committed wave count itself grows into\n"
-            "the hundreds. At the 10³–10⁴-wave depths the reference's deep-crawl\n"
-            "examples run, banding divides the dominant n_waves × overhead term\n"
-            "by k while each politeness step inside the band still enforces\n"
+            "snapshot against few avoided state reads — compose them only when\n"
+            "the committed wave count itself grows into the hundreds. At the\n"
+            "10³–10⁴-wave depths the reference's deep-crawl examples run,\n"
+            "banding divides the dominant n_waves × overhead term by k while each politeness step inside the band still enforces\n"
             "exact per-host budgets (ordering contract in CrawlConfig.depth_band\n"
             "docstring); max_waves counts steps, so a truncated banded crawl\n"
             "still selects the exact unbanded URL multiset. Legs with 10⁴+ steal\n"

@@ -150,12 +150,21 @@ def test_plan_is_pure_projection(spark):
     assert "Exchange" not in plan
 
 
-def test_detect_blocked_in_crawl_loop(spark, tmp_path):
+@pytest.mark.parametrize("depth_band", [None, 2], ids=["band1", "band2"])
+@pytest.mark.parametrize("has_status", [True, False], ids=["status_code", "no_status_code"])
+def test_detect_blocked_in_crawl_loop(spark, tmp_path, has_status, depth_band):
     """CrawlConfig(detect_blocked=True): a host serving a Cloudflare
     interstitial with HTTP 200 (invisible to the status-code throttle)
-    takes the throttled path — recorded, never extracted, requeued under
-    backoff — while clean hosts crawl normally. With the flag off the
-    same page is treated as fetched content."""
+    takes the throttled path — recorded, never extracted, left pending
+    under backoff — while clean hosts crawl normally. With the flag off the
+    same page is treated as fetched content.
+
+    Throttled rows never burn the max_pages budget, whether or not the
+    pages table has a status_code column and whatever the band size: the
+    summary, the results and the metrics agree on the attempted count, and
+    every band size fetches the same set."""
+    from pyspark.sql import functions as F
+
     from crawl4ai_spark.frontier.bfs import CrawlConfig, run_crawl
     from crawl4ai_spark.frontier.store import WaveStore
 
@@ -175,28 +184,53 @@ def test_detect_blocked_in_crawl_loop(spark, tmp_path):
         "Checking your browser</form></body></html>"
     ).encode()
     rows = [
-        ("http://ok.com/", page("ok.com", "/", ["/a"]), 200),
+        ("http://ok.com/", page("ok.com", "/", ["/a", "/b"]), 200),
         ("http://ok.com/a", page("ok.com", "/a"), 200),
+        ("http://ok.com/b", page("ok.com", "/b"), 200),
         ("http://walled.com/", interstitial, 200),
     ]
     pages = spark.createDataFrame(rows, "url string, html binary, status_code int")
+    if not has_status:
+        pages = pages.drop("status_code")
     seeds = spark.createDataFrame(
         [("http://ok.com/",), ("http://walled.com/",)], "url string"
     )
+    # the same sets for every band size and with or without status_code
+    expected = {
+        True: {
+            "http://ok.com/": {"fetched"},
+            "http://ok.com/a": {"fetched"},
+            "http://ok.com/b": {"fetched"},
+            "http://walled.com/": {"throttled"},
+        },
+        False: {
+            "http://ok.com/": {"fetched"},
+            "http://ok.com/a": {"fetched"},
+            "http://walled.com/": {"fetched"},
+        },
+    }
 
     for flag, expect_walled in ((True, {"throttled"}), (False, {"fetched"})):
         store_dir = str(tmp_path / f"store_{flag}")
-        run_crawl(
+        summary = run_crawl(
             spark, pages, seeds, store_dir,
             CrawlConfig(
-                max_depth=2, links_only=True, use_bloom=False,
-                max_waves=20, detect_blocked=flag,
+                max_depth=2, content_mode="links", use_bloom=False,
+                max_waves=20, detect_blocked=flag, max_pages=3,
+                depth_band=depth_band,
             ),
         )
-        results = WaveStore(spark, store_dir).read_table("results").collect()
+        store = WaveStore(spark, store_dir)
+        results = store.read_table("results").collect()
         by_url = {}
         for r in results:
             by_url.setdefault(r.url, set()).add(r.status)
         assert "fetched" in by_url["http://ok.com/"]
         assert "fetched" in by_url["http://ok.com/a"]
         assert by_url["http://walled.com/"] == expect_walled, flag
+        assert by_url == expected[flag], flag
+        n_attempted = sum(r.status != "throttled" for r in results)
+        metrics_attempted = (
+            store.read_table("metrics").agg(F.sum("n_attempted")).collect()[0][0]
+        )
+        assert summary["total_attempted"] == n_attempted == metrics_attempted == 3, flag

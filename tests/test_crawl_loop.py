@@ -49,7 +49,7 @@ def test_bfs_matches_reference_with_budgets_and_robots(
 ):
     pages, seeds, robots, budgets = _inputs(spark, site_dir)
     store_dir = str(tmp_path / f"store_bloom_{use_bloom}")
-    config = CrawlConfig(max_depth=3, links_only=True, use_bloom=use_bloom, n_bloom_shards=4)
+    config = CrawlConfig(max_depth=3, content_mode="links", use_bloom=use_bloom, n_bloom_shards=4)
     summary = run_crawl(spark, pages, seeds, store_dir, config, robots=robots, host_budgets=budgets)
 
     budget_map = {r["host"]: r["budget"] for r in site["host_budgets"]}
@@ -71,7 +71,7 @@ def test_bfs_depths_match_link_graph_oracle(spark, site, site_dir, tmp_path):
     generator's link-graph oracle."""
     pages, seeds, _, _ = _inputs(spark, site_dir)
     store_dir = str(tmp_path / "store_pure")
-    config = CrawlConfig(max_depth=3, links_only=True, use_bloom=False)
+    config = CrawlConfig(max_depth=3, content_mode="links", use_bloom=False)
     run_crawl(spark, pages, seeds, store_dir, config)
 
     store = WaveStore(spark, store_dir)
@@ -88,7 +88,7 @@ def test_no_url_attempted_twice(spark, site_dir, tmp_path):
     store_dir = str(tmp_path / "store_once")
     run_crawl(
         spark, pages, seeds, store_dir,
-        CrawlConfig(max_depth=3, links_only=True, n_bloom_shards=4),
+        CrawlConfig(max_depth=3, content_mode="links", n_bloom_shards=4),
         robots=robots, host_budgets=budgets,
     )
     store = WaveStore(spark, store_dir)
@@ -102,12 +102,12 @@ def test_resume_exactly_continues(spark, site, site_dir, tmp_path):
     uninterrupted crawl, no duplicate attempts."""
     pages, seeds, robots, budgets = _inputs(spark, site_dir)
     store_dir = str(tmp_path / "store_resume")
-    config_partial = CrawlConfig(max_depth=3, links_only=True, max_waves=2, n_bloom_shards=4)
+    config_partial = CrawlConfig(max_depth=3, content_mode="links", max_waves=2, n_bloom_shards=4)
     run_crawl(spark, pages, seeds, store_dir, config_partial, robots=robots, host_budgets=budgets)
     store = WaveStore(spark, store_dir)
     assert store.last_wave() == 1  # stopped early
 
-    config_full = CrawlConfig(max_depth=3, links_only=True, n_bloom_shards=4)
+    config_full = CrawlConfig(max_depth=3, content_mode="links", n_bloom_shards=4)
     summary = run_crawl(spark, pages, seeds, store_dir, config_full, robots=robots, host_budgets=budgets)
     assert summary["resumed_from"] == 1
 
@@ -126,7 +126,7 @@ def test_resume_exactly_continues(spark, site, site_dir, tmp_path):
 def test_max_pages_budget(spark, site, site_dir, tmp_path):
     pages, seeds, _, _ = _inputs(spark, site_dir)
     store_dir = str(tmp_path / "store_cap")
-    config = CrawlConfig(max_depth=3, links_only=True, max_pages=10, use_bloom=False)
+    config = CrawlConfig(max_depth=3, content_mode="links", max_pages=10, use_bloom=False)
     summary = run_crawl(spark, pages, seeds, store_dir, config)
     assert summary["total_attempted"] <= 10
     ref = _reference(site, robots=False, max_pages=10, max_depth=3)
@@ -138,7 +138,7 @@ def test_max_pages_budget(spark, site, site_dir, tmp_path):
 def test_full_extraction_mode_writes_markdown(spark, site, site_dir, tmp_path):
     pages, seeds, _, _ = _inputs(spark, site_dir)
     store_dir = str(tmp_path / "store_full")
-    config = CrawlConfig(max_depth=1, links_only=False, use_bloom=False)
+    config = CrawlConfig(max_depth=1, content_mode="full", use_bloom=False)
     run_crawl(spark, pages, seeds, store_dir, config)
     store = WaveStore(spark, store_dir)
     results = store.read_table("results").where(F.col("status") == "fetched")
@@ -196,7 +196,7 @@ def test_dfs_strategy_matches_reference_preorder(spark, tmp_path):
     from crawl4ai_spark.frontier.store import WaveStore
 
     config = CrawlConfig(
-        max_depth=3, links_only=True, use_bloom=False,
+        max_depth=3, content_mode="links", use_bloom=False,
         strategy="dfs", default_budget=1, max_waves=200,
     )
     run_crawl(spark, pages, seeds, store_dir, config)
@@ -234,7 +234,7 @@ def test_throttled_host_backoff_and_retirement(spark, tmp_path):
     store_dir = str(tmp_path / "store")
     summary = run_crawl(
         spark, pages, seeds, store_dir,
-        CrawlConfig(max_depth=2, links_only=True, use_bloom=False, max_waves=30),
+        CrawlConfig(max_depth=2, content_mode="links", use_bloom=False, max_waves=30),
     )
     store = WaveStore(spark, store_dir)
     results = store.read_table("results").collect()
@@ -443,7 +443,7 @@ def test_host_prior_steers_budgeted_selection_and_preserves_seen_set(
     base_dir = str(tmp_path / "store_nop")
     run_crawl(
         spark, pages, seeds, base_dir,
-        CrawlConfig(max_depth=3, links_only=True, use_bloom=False),
+        CrawlConfig(max_depth=3, content_mode="links", use_bloom=False),
     )
     base = WaveStore(spark, base_dir).read_table("results")
     full_set = {r.url for r in base.select("url").collect()}
@@ -454,7 +454,7 @@ def test_host_prior_steers_budgeted_selection_and_preserves_seen_set(
 
     n_seeds = seeds.count()
     cap = n_seeds + 2  # below the 3 depth-1 candidates each host offers
-    capped_cfg = dict(max_depth=3, links_only=True, use_bloom=False, max_pages=cap)
+    capped_cfg = dict(max_depth=3, content_mode="links", use_bloom=False, max_pages=cap)
 
     plain_dir = str(tmp_path / "store_plain_cap")
     run_crawl(spark, pages, seeds, plain_dir, CrawlConfig(**capped_cfg))
@@ -487,7 +487,7 @@ def test_host_prior_steers_budgeted_selection_and_preserves_seen_set(
     run_crawl(
         spark, pages, seeds, inv_dir,
         CrawlConfig(
-            max_depth=3, links_only=True, use_bloom=False,
+            max_depth=3, content_mode="links", use_bloom=False,
             host_prior=prior, host_prior_weight=10.0,
         ),
     )

@@ -235,7 +235,7 @@ def test_best_first_scorer_orders_frontier(spark, tmp_path):
     store_dir = str(tmp_path / "store_bff")
     config = CrawlConfig(
         max_depth=3,
-        links_only=True,
+        content_mode="links",
         use_bloom=False,
         default_budget=1,  # tight budget so ordering matters
         scorer=keyword_relevance_scorer(["cat1"]),
@@ -562,7 +562,7 @@ def test_anchor_text_best_first_crawl(spark, tmp_path):
     store_dir = str(tmp_path / "store")
     config = CrawlConfig(
         max_depth=2,
-        links_only=True,
+        content_mode="links",
         use_bloom=False,
         default_budget=1,
         text_scorer=anchor_keyword_scorer(["category 1"]),

@@ -31,7 +31,7 @@ def test_results_stream_tails_wave_commits(spark, site_dir, tmp_path):
     store_dir = str(tmp_path / "store_stream")
     pages = spark.read.parquet(os.path.join(site_dir, "pages.parquet"))
     seeds = spark.read.parquet(os.path.join(site_dir, "seeds.parquet"))
-    run_crawl(spark, pages, seeds, store_dir, CrawlConfig(max_depth=2, links_only=True, use_bloom=False))
+    run_crawl(spark, pages, seeds, store_dir, CrawlConfig(max_depth=2, content_mode="links", use_bloom=False))
 
     stream = results_stream(spark, store_dir).select("url", "wave", "status")
     query = (
