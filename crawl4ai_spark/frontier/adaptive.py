@@ -162,7 +162,10 @@ def _fetch_and_extract(pages: DataFrame, urls_df: DataFrame, wave: int) -> tuple
 
 
 def _empty(spark: SparkSession, schema: str) -> DataFrame:
-    return spark.createDataFrame([], schema)
+    """An empty frame of a DDL schema, planned in the JVM (an empty
+    createDataFrame would run a Python-RDD job)."""
+    fields = T.StructType.fromDDL(schema).fields
+    return spark.range(0).select(*(F.lit(None).cast(f.dataType).alias(f.name) for f in fields))
 
 
 def _commit_wave(
@@ -230,7 +233,11 @@ def _commit_wave(
         "saturation": sat,
         "confidence": conf,
     }
-    store.write_table("metrics", wave, spark.createDataFrame([row], _METRICS_SCHEMA))
+    # one row of literals: a JVM-only job, no Python worker
+    metrics = spark.range(1, numPartitions=1).select(
+        *(F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in _METRICS_SCHEMA.fields)
+    )
+    store.write_table("metrics", wave, metrics)
     store.commit(wave, dict(meta, **row))
     return row
 

@@ -9,7 +9,7 @@ flagship loop:
     while pending:
         repeat depth_band times:                    # one _step per wave
             wave    = politeness_rank(pending)      # window per host
-            gated   = robots(wave)                  # broadcast join + UDF
+            gated   = robots(wave)                  # compiled rules, broadcast join
             fetched = gated ⋈ pages on url          # the "fetch"
             res     = extract(fetched)              # Arrow UDFs
             links   = explode → canonical → first-wins  # discovery
@@ -60,7 +60,7 @@ from crawl4ai_spark.operators.politeness import (
     wave_order,
 )
 from crawl4ai_spark.operators.antibot import blocked_reason_col
-from crawl4ai_spark.operators.robots import attach_robots_verdict
+from crawl4ai_spark.operators.robots import compile_robots, robots_gate
 from crawl4ai_spark.frontier.store import WaveStore
 
 VALID_URL_RE = r"^https?://[^/]*\.[^/]*"
@@ -339,6 +339,20 @@ def _result_rows(work: DataFrame, wave: int, mode: str) -> DataFrame:
     )
 
 
+def _apply_host_prior(cand: DataFrame, host_prior: DataFrame, weight: float) -> DataFrame:
+    """Add ``weight * prior`` of the candidate's host to its score. The
+    prior is aggregated per host (``max``) before the broadcast join, so
+    a host listed twice cannot fan a candidate out into two rows."""
+    prior = host_prior.groupBy("host").agg(F.max(F.col("prior").cast("double")).alias("_hp"))
+    return (
+        cand.join(F.broadcast(prior), "host", "left")
+        .withColumn(
+            "score", F.col("score") + F.lit(float(weight)) * F.coalesce(F.col("_hp"), F.lit(0.0))
+        )
+        .drop("_hp")
+    )
+
+
 def _discover(
     extracted: DataFrame, wave: int, config: CrawlConfig, mode: str = "links"
 ) -> DataFrame:
@@ -401,19 +415,7 @@ def _discover(
     else:
         cand = cand.withColumn("score", F.lit(1.0))
     if config.host_prior is not None:
-        prior = config.host_prior.select(
-            F.col("host"), F.col("prior").cast("double").alias("_hp")
-        )
-        cand = (
-            cand.join(F.broadcast(prior), "host", "left")
-            .withColumn(
-                "score",
-                F.col("score")
-                + F.lit(float(config.host_prior_weight))
-                * F.coalesce(F.col("_hp"), F.lit(0.0)),
-            )
-            .drop("_hp")
-        )
+        cand = _apply_host_prior(cand, config.host_prior, config.host_prior_weight)
     if config.score_threshold is not None:
         cand = cand.where(F.col("score") >= config.score_threshold)
     # first-wins dedup as a hash aggregation (min_by with the lexicographic
@@ -510,7 +512,7 @@ def _stalled(host_state: DataFrame | None, pending: DataFrame) -> bool:
 def _step(
     config: CrawlConfig,
     pages: DataFrame,
-    robots: DataFrame | None,
+    rules: DataFrame | None,  # compile_robots output
     host_budgets: DataFrame | None,
     state: _State,
     band: list[_Step],
@@ -565,7 +567,7 @@ def _step(
         pending_hint=pending_hint,
     )
     wave_sel = ranked.where(F.col("selected")).drop("selected")
-    wave_sel = attach_robots_verdict(wave_sel, robots, config.user_agent)
+    wave_sel = robots_gate(wave_sel, rules)
     fetched = wave_sel.join(pages, "url", "left")
     # optional status_code column drives the throttle path (429/503 →
     # backoff; absent → every present page fetches)
@@ -723,6 +725,9 @@ def run_crawl(
 
     from concurrent.futures import ThreadPoolExecutor
 
+    # robots rules compile once per crawl (one Python call per host row);
+    # every wave then decides its URLs in the JVM against this cache
+    rules = compile_robots(robots, config.user_agent).persist() if robots is not None else None
     pool = ThreadPoolExecutor(max_workers=2, thread_name_prefix="wave-writer")
     try:
         while steps_done < config.max_waves:
@@ -748,7 +753,7 @@ def run_crawl(
                 exact = frontier_total is not None and not band
                 hint = frontier_total - total_attempted if exact else None
                 step = _step(
-                    config, pages, robots, host_budgets, state, band, host_state,
+                    config, pages, rules, host_budgets, state, band, host_state,
                     wave, remaining, hint, eager,
                 )
                 if step is None:
@@ -848,6 +853,8 @@ def run_crawl(
         # submit and result must not leave write jobs running against a
         # session the caller is about to stop
         pool.shutdown(wait=True)
+        if rules is not None:
+            rules.unpersist()
 
     summary["total_attempted"] = total_attempted
     summary["final_wave"] = wave - 1

@@ -245,5 +245,7 @@ def udf_base_domain(url: pd.Series) -> pd.Series:
 
 def host_col(url_col):
     """Native (JVM-side) host extraction for grouping/bucketing — stays in
-    WholeStageCodegen; use the UDF only where canonical equality matters."""
-    return F.lower(F.parse_url(url_col, F.lit("HOST")))
+    WholeStageCodegen; use the UDF only where canonical equality matters.
+    An unparseable URL has a NULL host (``parse_url`` under ANSI mode
+    would fail the job instead)."""
+    return F.lower(F.try_parse_url(url_col, F.lit("HOST")))

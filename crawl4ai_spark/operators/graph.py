@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from crawl4ai_spark.functions.urlnorm import host_col
+
 # ── connected components (large-star / small-star) ───────────────────────
 
 
@@ -321,9 +323,9 @@ def host_authority_prior(
         scored = hits(edges, src=src, dst=dst, iters=iters).select(
             "node", F.col("authority").alias("s")
         )
-    host = F.lower(F.regexp_extract("node", r"^[a-z][a-z0-9+.\-]*://([^/?#]+)", 1))
+    host = host_col(F.col("node"))
     by_host = (
-        scored.where(host != "")
+        scored.where(host.isNotNull() & (host != ""))
         .groupBy(host.alias("host"))
         .agg(F.sum("s").alias("_raw"))
     )

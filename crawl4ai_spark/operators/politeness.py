@@ -249,13 +249,17 @@ def update_host_state(
       transitions, not randomness; SURVEY.md §7 watch list)
     - fail_count > max_retries → host retired (cooldown = -1 sentinel)
     """
-    spark = wave_outcomes.sparkSession
     if host_state is None:
-        host_state = spark.createDataFrame(
-            [],
-            "host string, current_delay double, fail_count int, cooldown_waves int",
+        # first wave: no prior state, so no join — the prior columns are
+        # typed NULLs (an empty createDataFrame would run a Python-RDD job)
+        merged = wave_outcomes.select(
+            "*",
+            F.lit(None).cast("double").alias("current_delay"),
+            F.lit(None).cast("int").alias("fail_count"),
+            F.lit(None).cast("int").alias("cooldown_waves"),
         )
-    merged = host_state.join(wave_outcomes, "host", "full")
+    else:
+        merged = host_state.join(wave_outcomes, "host", "full")
     throttled = F.coalesce(F.col("n_throttled"), F.lit(0)) > 0
     delay = F.coalesce(F.col("current_delay"), F.lit(base_delay))
     fails = F.coalesce(F.col("fail_count"), F.lit(0))

@@ -515,3 +515,46 @@ def test_host_authority_prior_rollup(spark):
         assert out["big.test"] == 1.0 and out["small.test"] == 0.0
     with pytest.raises(ValueError):
         host_authority_prior(df, kind="degree")
+
+
+def test_host_prior_duplicate_host_rows_do_not_fan_out(spark):
+    """A host listed twice in ``host_prior`` boosts by its largest prior
+    and leaves one row per candidate (the join no longer fans out)."""
+    from crawl4ai_spark.frontier.bfs import _apply_host_prior
+
+    cand = spark.createDataFrame(
+        [("http://a.test/1", "a.test", 1.0), ("http://a.test/2", "a.test", 1.0),
+         ("http://b.test/1", "b.test", 1.0), ("http://c.test/1", "c.test", 1.0)],
+        "url string, host string, score double",
+    )
+    prior = spark.createDataFrame(
+        [("a.test", 0.2), ("a.test", 0.9), ("a.test", 0.9), ("b.test", 0.5)],
+        "host string, prior double",
+    )
+    rows = _apply_host_prior(cand, prior, 2.0).collect()
+    assert sorted((r.url, r.score) for r in rows) == [
+        ("http://a.test/1", 2.8), ("http://a.test/2", 2.8),
+        ("http://b.test/1", 2.0), ("http://c.test/1", 1.0),
+    ]
+
+
+def test_host_authority_prior_uses_frontier_host_rule(spark):
+    """Prior hosts are the frontier's own ``host_col`` keys: scheme and
+    host case, port and userinfo do not split a host, and a node that is
+    not a URL is skipped instead of failing the job."""
+    from crawl4ai_spark.functions.urlnorm import host_col
+    from crawl4ai_spark.operators.graph import host_authority_prior
+
+    edges = spark.createDataFrame(
+        [
+            ("HTTP://Example.com:8080/x", "http://example.com/y"),
+            ("http://user@EXAMPLE.com/z", "http://other.test/a"),
+            ("http://other.test/a", "HTTP://Example.com:8080/x"),
+            ("not a url", "http://other.test/a"),
+        ],
+        "src string, dst string",
+    )
+    out = {r["host"]: r["prior"] for r in host_authority_prior(edges).collect()}
+    assert set(out) == {"example.com", "other.test"}
+    frontier_host = edges.select(host_col(F.col("src")).alias("h")).first()["h"]
+    assert frontier_host in out
