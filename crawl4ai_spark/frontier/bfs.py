@@ -6,6 +6,7 @@ Semantics ported from the reference's level-synchronous deep crawl
 max_depth and max-pages capacity trim), re-expressed as the SURVEY.md §3.3
 flagship loop:
 
+    prefetch(seeds, robots rules, budgets, prior)   # cached on the pool
     while pending:
         repeat depth_band times:                    # one _step per wave
             wave    = politeness_rank(pending)      # window per host
@@ -16,6 +17,13 @@ flagship loop:
             fresh   = links ▷ seen                  # bloom + exact anti-join
         commit(results, frontier_delta, bloom, host_state, metrics, lineage)
         state   = reload(store)                     # _load_state
+
+The frames that live for the whole crawl are persisted at its start and
+filled on the loop's thread pool, so their jobs (the robots compile also
+starts the Python worker daemon) run while the driver plans the first
+wave. Every job is described ``wave=<w> phase=<p>`` (``prefetch.<frame>``,
+``step``, ``write.<table>``, ``bloom``, ``metrics``, ``reload``,
+``compact``).
 
 An unbanded crawl is a band of 1, and the band size picks the strategy.
 A band of 1 only persists its frames: the commit's results and
@@ -339,13 +347,18 @@ def _result_rows(work: DataFrame, wave: int, mode: str) -> DataFrame:
     )
 
 
-def _apply_host_prior(cand: DataFrame, host_prior: DataFrame, weight: float) -> DataFrame:
-    """Add ``weight * prior`` of the candidate's host to its score. The
-    prior is aggregated per host (``max``) before the broadcast join, so
-    a host listed twice cannot fan a candidate out into two rows."""
-    prior = host_prior.groupBy("host").agg(F.max(F.col("prior").cast("double")).alias("_hp"))
+def _per_host_prior(host_prior: DataFrame) -> DataFrame:
+    """``CrawlConfig.host_prior`` as one ``(host, prior)`` row per host
+    (``max``), so a host listed twice cannot fan a candidate out into two
+    rows of the broadcast join. run_crawl builds it once per crawl."""
+    return host_prior.groupBy("host").agg(F.max(F.col("prior").cast("double")).alias("prior"))
+
+
+def _apply_host_prior(cand: DataFrame, prior: DataFrame, weight: float) -> DataFrame:
+    """Add ``weight * prior`` of the candidate's host to its score;
+    ``prior`` holds one row per host (``_per_host_prior``)."""
     return (
-        cand.join(F.broadcast(prior), "host", "left")
+        cand.join(F.broadcast(prior.withColumnRenamed("prior", "_hp")), "host", "left")
         .withColumn(
             "score", F.col("score") + F.lit(float(weight)) * F.coalesce(F.col("_hp"), F.lit(0.0))
         )
@@ -354,12 +367,17 @@ def _apply_host_prior(cand: DataFrame, host_prior: DataFrame, weight: float) -> 
 
 
 def _discover(
-    extracted: DataFrame, wave: int, config: CrawlConfig, mode: str = "links"
+    extracted: DataFrame,
+    wave: int,
+    config: CrawlConfig,
+    mode: str = "links",
+    host_prior: DataFrame | None = None,
 ) -> DataFrame:
     """Explode links of fetched pages into frontier-candidate rows with
     first-wins dedup inside the wave (order: parent score-order, then link
     position — the deterministic analog of the reference's
-    discovery-insertion order)."""
+    discovery-insertion order). ``host_prior`` is ``_per_host_prior`` of
+    ``config.host_prior``."""
     sides = [F.col("links.internal")]
     if config.include_external:
         sides.append(F.col("links.external"))
@@ -414,8 +432,8 @@ def _discover(
         cand = cand.withColumn("score", F.coalesce(F.col("link_score"), F.lit(1.0)))
     else:
         cand = cand.withColumn("score", F.lit(1.0))
-    if config.host_prior is not None:
-        cand = _apply_host_prior(cand, config.host_prior, config.host_prior_weight)
+    if host_prior is not None:
+        cand = _apply_host_prior(cand, host_prior, config.host_prior_weight)
     if config.score_threshold is not None:
         cand = cand.where(F.col("score") >= config.score_threshold)
     # first-wins dedup as a hash aggregation (min_by with the lexicographic
@@ -521,6 +539,7 @@ def _step(
     remaining: int | None,
     pending_hint: int | None,
     eager: bool,
+    host_prior: DataFrame | None = None,  # _per_host_prior output
 ) -> _Step | None:
     """One politeness wave: rank → robots → fetch → extract → discover →
     anti-join. ``band`` holds the earlier, uncommitted steps of this band:
@@ -619,7 +638,7 @@ def _step(
         host_state = host_state.localCheckpoint()
 
     fresh = _discover(
-        work.where(F.col("status") == "fetched"), wave, config, config.content_mode
+        work.where(F.col("status") == "fetched"), wave, config, config.content_mode, host_prior
     )
     fresh = _anti_join_seen(fresh, state.frontier_all.select("url_fp"), state.shards, config)
     for s in band:
@@ -658,6 +677,22 @@ def _compact(store: WaveStore, tables: tuple[str, ...], vacuum: bool = False) ->
     return folded
 
 
+def _fill_cache(df: DataFrame) -> None:
+    """Fill the cache of the persisted ``df`` with one job over its cached
+    batches (``df.count()`` would plan an aggregation over the cache and
+    add two more jobs to the one that fills it)."""
+    cache_manager = df.sparkSession._jsparkSession.sharedState().cacheManager()
+    cached = cache_manager.lookupCachedData(df._jdf).get()
+    cached.cachedRepresentation().cacheBuilder().cachedColumnBuffers().count()
+
+
+def _in_phase(sc, wave: int, phase: str, fn, *args):
+    """``fn(*args)`` with this thread's Spark job description set to the
+    wave and phase, so every job of the crawl names where it belongs."""
+    sc.setJobDescription(f"wave={wave} phase={phase}")
+    return fn(*args)
+
+
 def run_crawl(
     spark: SparkSession,
     pages: DataFrame,
@@ -687,54 +722,80 @@ def run_crawl(
     band_size = max(config.depth_band or 1, 1)
     eager = band_size > 1
 
+    from concurrent.futures import ThreadPoolExecutor, as_completed
+
+    sc = spark.sparkContext
+    caller_description = sc.getLocalProperty("spark.job.description")
+    # up to four prefetches plus the two concurrent writes: no write
+    # queues behind a prefetch
+    pool = ThreadPoolExecutor(max_workers=6, thread_name_prefix="wave-writer")
+    lifetime: dict[str, DataFrame] = {}
+    prefetch = []
+    band: list[_Step] = []
+
+    def persist_and_fill(name: str, df: DataFrame) -> DataFrame:
+        """Persist a frame that lives for the whole crawl and fill its
+        cache on the pool at once, so the job runs while the driver
+        builds the next frames and plans the first wave."""
+        lifetime[name] = df.persist()
+        prefetch.append(pool.submit(_in_phase, sc, wave, f"prefetch.{name}", _fill_cache, df))
+        return df
+
     last = store.last_wave()
-    if last is None:
-        # persisted: wave 0 reuses the seed frontier three times (politeness
-        # pending, seen anti-join, frontier_delta union)
-        seed_delta = _prepare_seeds(seeds, need_path_keys=(config.strategy == "dfs")).persist()
-        state = _State(seed_delta, None, None, None)
-        wave = steps_done = total_attempted = 0
-        frontier_total = None  # unknown until the first footer count lands
-    else:
-        state = _load_state(store, config)
-        wave = last + 1
-        committed = store.committed_waves()
-        steps_done = sum(
-            int(store.marker(w).get("meta", {}).get("band_steps", 1)) for w in committed
-        )
-        scalars = (
-            [store.read_scalar("metrics", w, "n_attempted") for w in committed]
-            if all("metrics" in store.marker(w)["tables"] for w in committed)
-            else [None]
-        )
-        if any(s is None for s in scalars):
-            # a wave's metrics dir is gone (compacted+vacuumed store) or a
-            # wave predates the metrics table — recount, never assume 0
-            keys = state.attempted_keys
-            total_attempted = keys.count() if keys is not None else 0
-        else:
-            # per-wave n_attempted scalars from the metrics deltas —
-            # driver-side pyarrow reads, no Spark job on resume
-            total_attempted = sum(int(s) for s in scalars)
-        seed_delta = None
-        frontier_total = sum(
-            store.marker(w)["counts"].get("frontier_delta", 0) for w in committed
-        )
-
     summary = {"waves": [], "resumed_from": last}
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    # robots rules compile once per crawl (one Python call per host row);
-    # every wave then decides its URLs in the JVM against this cache
-    rules = compile_robots(robots, config.user_agent).persist() if robots is not None else None
-    pool = ThreadPoolExecutor(max_workers=2, thread_name_prefix="wave-writer")
     try:
+        if last is None:
+            wave = steps_done = total_attempted = 0
+            frontier_total = None  # unknown until the first footer count lands
+            # wave 0 reuses the seed frontier three times (politeness
+            # pending, seen anti-join, frontier_delta union); the longest
+            # prefetch, so it starts first
+            seed_delta = persist_and_fill(
+                "seeds", _prepare_seeds(seeds, need_path_keys=(config.strategy == "dfs"))
+            )
+            state = _State(seed_delta, None, None, None)
+        else:
+            wave = last + 1
+            sc.setJobDescription(f"wave={wave} phase=reload")
+            state = _load_state(store, config)
+            committed = store.committed_waves()
+            steps_done = sum(
+                int(store.marker(w).get("meta", {}).get("band_steps", 1)) for w in committed
+            )
+            scalars = (
+                [store.read_scalar("metrics", w, "n_attempted") for w in committed]
+                if all("metrics" in store.marker(w)["tables"] for w in committed)
+                else [None]
+            )
+            if any(s is None for s in scalars):
+                # a wave's metrics dir is gone (compacted+vacuumed store) or
+                # a wave predates the metrics table — recount, never assume 0
+                keys = state.attempted_keys
+                total_attempted = keys.count() if keys is not None else 0
+            else:
+                # per-wave n_attempted scalars from the metrics deltas —
+                # driver-side pyarrow reads, no Spark job on resume
+                total_attempted = sum(int(s) for s in scalars)
+            seed_delta = None
+            frontier_total = sum(
+                store.marker(w)["counts"].get("frontier_delta", 0) for w in committed
+            )
+        # the robots rules compile once per crawl (a Python UDF over the
+        # host rows; every wave decides its URLs in the JVM)
+        rules = budgets = prior = None
+        if robots is not None:
+            rules = persist_and_fill("robots", compile_robots(robots, config.user_agent))
+        if host_budgets is not None:
+            budgets = persist_and_fill("host_budgets", host_budgets.select("host", "budget"))
+        if config.host_prior is not None:
+            prior = persist_and_fill("host_prior", _per_host_prior(config.host_prior))
         while steps_done < config.max_waves:
             if state is None:
+                sc.setJobDescription(f"wave={wave} phase=reload")
                 state = _load_state(store, config)
+            sc.setJobDescription(f"wave={wave} phase=step")
             t0 = time.time()
-            band: list[_Step] = []
+            band = []
             host_state = state.host_state
             crawl_done = False
             while len(band) < min(band_size, config.max_waves - steps_done):
@@ -753,8 +814,8 @@ def run_crawl(
                 exact = frontier_total is not None and not band
                 hint = frontier_total - total_attempted if exact else None
                 step = _step(
-                    config, pages, rules, host_budgets, state, band, host_state,
-                    wave, remaining, hint, eager,
+                    config, pages, rules, budgets, state, band, host_state,
+                    wave, remaining, hint, eager, prior,
                 )
                 if step is None:
                     crawl_done = True
@@ -771,12 +832,24 @@ def run_crawl(
                 DataFrame.unionByName,
                 ([seed_delta] if seed_delta is not None else []) + [s.fresh for s in band],
             )
+            # in a band of 1 the writes are the first jobs to read the
+            # crawl-lifetime caches: wait until the prefetches have filled
+            # them, or each write would plan its own fill jobs; the first
+            # failed prefetch raises at once
+            for f in as_completed(prefetch):
+                f.result()
             # results and host_state depend only on the step frames: their
             # writes run in driver threads, overlapping the discover+frontier
             # job, so the wave costs max(), not sum(), of the three (per-block
             # locks still compute a band-of-1 `work` block once)
-            f_results = pool.submit(store.write_table, "results", wave, results)
-            f_host = pool.submit(store.write_table, "host_state", wave, host_state)
+            f_results = pool.submit(
+                _in_phase, sc, wave, "write.results", store.write_table, "results", wave, results
+            )
+            f_host = pool.submit(
+                _in_phase, sc, wave, "write.host_state",
+                store.write_table, "host_state", wave, host_state,
+            )
+            sc.setJobDescription(f"wave={wave} phase=write.frontier_delta")
             frontier_written = store.write_table("frontier_delta", wave, frontier_delta)
             n_fresh = store.pending_count(wave, "frontier_delta")
             f_results.result()
@@ -788,11 +861,10 @@ def run_crawl(
                 # this wave's throttle count, summed driver-side from the
                 # written host_state bytes — no count job
                 n_throttled = sum(store.read_column("host_state", wave, "wave_throttled"))
+                sc.setJobDescription(f"wave={wave} phase=step")
                 if n_selected == 0 and _stalled(state.host_state, band[0].pending):
                     # the staged, uncommitted dirs are reclaimed by the
                     # next run's recover()
-                    for c in band[0].cached:
-                        c.unpersist()
                     break
 
             # bloom shards depend only on the already-written frontier
@@ -801,9 +873,7 @@ def run_crawl(
             f_bloom = None
             if config.use_bloom:
                 f_bloom = pool.submit(
-                    store.write_table,
-                    "seen_bloom",
-                    wave,
+                    _in_phase, sc, wave, "bloom", store.write_table, "seen_bloom", wave,
                     build_bloom_shards(frontier_written, config.n_bloom_shards, config.bloom_fpp),
                 )
             # lineage derives from the already-written parquet footers,
@@ -822,6 +892,7 @@ def run_crawl(
                 F.lit(n_fresh).cast("long").alias("n_new_frontier"),
                 F.lit(time.time() - t0).alias("wall_sec"),
             )
+            sc.setJobDescription(f"wave={wave} phase=metrics")
             store.write_table("metrics", wave, metrics)
             if f_bloom is not None:
                 f_bloom.result()
@@ -846,22 +917,31 @@ def run_crawl(
             # re-derived from store reads, and folded wave dirs are left on
             # disk — no mid-crawl vacuum)
             if config.compact_every and wave % config.compact_every == 0:
+                sc.setJobDescription(f"wave={wave - 1} phase=compact")
                 _compact(store, ("frontier_delta", "results", "seen_bloom"))
             state = None
-    finally:
-        # always drain the writer threads — an exception raised between
-        # submit and result must not leave write jobs running against a
-        # session the caller is about to stop
-        pool.shutdown(wait=True)
-        if rules is not None:
-            rules.unpersist()
+        for f in as_completed(prefetch):
+            f.result()
 
-    summary["total_attempted"] = total_attempted
-    summary["final_wave"] = wave - 1
-    if config.compact_on_finish:
-        # delta-style tables only — host_state is snapshot-style (its
-        # per-wave dirs ARE the history read_latest walks)
-        summary["compacted"] = _compact(
-            store, ("results", "frontier_delta", "seen_bloom", "metrics", "lineage"), vacuum=True
-        )
+        summary["total_attempted"] = total_attempted
+        summary["final_wave"] = wave - 1
+        if config.compact_on_finish:
+            # delta-style tables only — host_state is snapshot-style (its
+            # per-wave dirs ARE the history read_latest walks)
+            sc.setJobDescription(f"wave={wave - 1} phase=compact")
+            summary["compacted"] = _compact(
+                store, ("results", "frontier_delta", "seen_bloom", "metrics", "lineage"),
+                vacuum=True,
+            )
+    finally:
+        # drain every thread (prefetches and writes) before anything is
+        # released: an exception raised between submit and result must
+        # not leave jobs running against a session the caller may stop
+        pool.shutdown(wait=True, cancel_futures=True)
+        for s in band:  # committed bands are released already; no-op then
+            for c in s.cached:
+                c.unpersist()
+        for df in lifetime.values():
+            df.unpersist()
+        sc.setJobDescription(caller_description)
     return summary

@@ -104,14 +104,17 @@ class WaveStore:
         written bytes instead of recomputing the lineage). Not visible at
         the final path — to any reader — until commit() renames it."""
         path = self._staging_path(name, wave)
+        schema = df.schema
         df.write.mode("overwrite").parquet(path)
         self._pending.setdefault(wave, {})[name] = self._footer_row_count(path)
         # schema recorded in the commit marker: read_table unions many
         # wave dirs and only pays a distributed mergeSchema footer sweep
         # when the recorded schemas actually differ (schema-widening code
         # change mid-store); uniform stores read plan-only
-        self._pending_schemas.setdefault(wave, {})[name] = df.schema.json()
-        return self.spark.read.parquet(path)
+        self._pending_schemas.setdefault(wave, {})[name] = schema.json()
+        # the written schema, given: no footer-inference job (the file
+        # source makes every field nullable, exactly as inference would)
+        return self.spark.read.schema(schema).parquet(path)
 
     def write_lineage(self, wave: int, source: str = "results", name: str = "lineage") -> None:
         """Per-partition lineage of an already-written wave table, derived
@@ -121,6 +124,7 @@ class WaveStore:
         produce no file, matching the old groupBy's absent groups)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
 
         src = self._staging_path(source, wave)
         if not os.path.exists(src):
@@ -148,9 +152,8 @@ class WaveStore:
         os.makedirs(path, exist_ok=True)
         pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
         self._pending.setdefault(wave, {})[name] = tbl.num_rows
-        self._pending_schemas.setdefault(wave, {})[name] = self.spark.read.parquet(
-            path
-        ).schema.json()
+        # the schema Spark reads back (every field nullable), without a read
+        self._pending_schemas.setdefault(wave, {})[name] = from_arrow_schema(tbl.schema).json()
 
     def pending_count(self, wave: int, name: str) -> int:
         return self._pending.get(wave, {}).get(name, 0)

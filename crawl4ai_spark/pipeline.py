@@ -70,7 +70,8 @@ class CurationPipeline:
 
     ``apply`` tags; ``run`` tags + accounts. Stage names must be
     unique and non-empty (they become ``fail_stage`` values and
-    lineage rows).
+    lineage rows). Input columns must not start with the reserved
+    ``_cp_`` prefix of the pipeline's own working columns.
     """
 
     def __init__(self, stages: list[Gate | Keeper], id_col: str = "doc_id"):
@@ -88,6 +89,9 @@ class CurationPipeline:
         Consecutive gates fold into one projection; each keeper costs
         one semi-join of ids against the alive set (dead rows carry
         through the join as a NULL match — id-only shuffle weight)."""
+        reserved = [c for c in docs.columns if c.startswith("_cp_")]
+        if reserved:
+            raise ValueError(f"input columns {reserved} use the reserved '_cp_' prefix")
         df = docs
         fail = F.lit(None).cast("string")
         for i, st in enumerate(self.stages):

@@ -519,8 +519,9 @@ def test_host_authority_prior_rollup(spark):
 
 def test_host_prior_duplicate_host_rows_do_not_fan_out(spark):
     """A host listed twice in ``host_prior`` boosts by its largest prior
-    and leaves one row per candidate (the join no longer fans out)."""
-    from crawl4ai_spark.frontier.bfs import _apply_host_prior
+    and leaves one row per candidate (the join no longer fans out):
+    run_crawl reduces the prior to one row per host once per crawl."""
+    from crawl4ai_spark.frontier.bfs import _apply_host_prior, _per_host_prior
 
     cand = spark.createDataFrame(
         [("http://a.test/1", "a.test", 1.0), ("http://a.test/2", "a.test", 1.0),
@@ -531,7 +532,7 @@ def test_host_prior_duplicate_host_rows_do_not_fan_out(spark):
         [("a.test", 0.2), ("a.test", 0.9), ("a.test", 0.9), ("b.test", 0.5)],
         "host string, prior double",
     )
-    rows = _apply_host_prior(cand, prior, 2.0).collect()
+    rows = _apply_host_prior(cand, _per_host_prior(prior), 2.0).collect()
     assert sorted((r.url, r.score) for r in rows) == [
         ("http://a.test/1", 2.8), ("http://a.test/2", 2.8),
         ("http://b.test/1", 2.0), ("http://c.test/1", 1.0),
@@ -558,3 +559,88 @@ def test_host_authority_prior_uses_frontier_host_rule(spark):
     assert set(out) == {"example.com", "other.test"}
     frontier_host = edges.select(host_col(F.col("src")).alias("h")).first()["h"]
     assert frontier_host in out
+
+
+def _crawl_left_nothing(spark):
+    """No Spark job of the crawl is still running and no frame it
+    persisted is still cached (listener events flushed first, so a job
+    that ended is no longer reported active)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_failed_wave_releases_every_persisted_frame(spark, site, site_dir, tmp_path):
+    """A wave whose fetch raises leaves nothing cached: the seed frontier,
+    the crawl-lifetime frames and the band's work frames are all released
+    on the way out."""
+    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+    bad = site["seeds"][0]["url"]
+    pages = pages.withColumn(
+        "html", F.when(F.col("url") == bad, F.raise_error(F.lit("bad page"))).otherwise(F.col("html"))
+    )
+    spark.catalog.clearCache()
+    with pytest.raises(Exception, match="bad page"):
+        run_crawl(
+            spark, pages, seeds, str(tmp_path / "store_fail"),
+            CrawlConfig(max_depth=1, content_mode="links", n_bloom_shards=4),
+            robots=robots, host_budgets=budgets,
+        )
+    _crawl_left_nothing(spark)
+
+
+def test_failed_prefetch_surfaces_and_no_job_outlives_the_crawl(spark, site_dir, tmp_path):
+    """The robots rules compile on the prefetch threads; when that fails,
+    run_crawl raises the error at once, commits nothing, and returns only
+    once every job it started has ended, here a slow budgets prefetch
+    still running when the error arrives."""
+    import time
+
+    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+    robots = robots.withColumn("rules_text", F.raise_error(F.lit("boom")).cast("string"))
+    slow = F.udf(lambda b: time.sleep(2.0) or b, "int")
+    budgets = budgets.withColumn("budget", slow("budget"))
+    spark.catalog.clearCache()
+    store_dir = str(tmp_path / "store_boom")
+    with pytest.raises(Exception, match="boom"):
+        run_crawl(
+            spark, pages, seeds, store_dir,
+            CrawlConfig(max_depth=1, content_mode="links", n_bloom_shards=4),
+            robots=robots, host_budgets=budgets,
+        )
+    _crawl_left_nothing(spark)
+    assert WaveStore(spark, store_dir).last_wave() is None
+
+
+def test_crawl_jobs_carry_wave_and_phase(spark, site_dir, tmp_path):
+    """Every job a crawl starts, on the driver thread or the pool, is
+    described ``wave=<w> phase=<p>``; the caller's description is
+    restored afterwards."""
+    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobDescription("caller")
+    try:
+        run_crawl(
+            spark, pages, seeds, str(tmp_path / "store_desc"),
+            CrawlConfig(max_depth=2, content_mode="links", n_bloom_shards=4),
+            robots=robots, host_budgets=budgets,
+        )
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    descriptions = {}
+    for job_id in set(tracker.getJobIdsForGroup(None)) - before:
+        job = sc._jsc.sc().statusStore().job(job_id)
+        desc = job.description()
+        descriptions[job_id] = desc.get() if desc.isDefined() else None
+    assert descriptions
+    phases = set()
+    for job_id, desc in descriptions.items():
+        assert desc is not None and desc.startswith("wave="), (job_id, desc)
+        phases.add(desc.split("phase=")[1])
+    assert {"prefetch.seeds", "prefetch.robots", "prefetch.host_budgets"} <= phases
+    assert {"write.results", "write.host_state", "write.frontier_delta", "bloom", "metrics"} <= phases

@@ -132,6 +132,19 @@ def test_stage_name_validation():
         CurationPipeline([Gate("", lambda df: F.lit(True))])
 
 
+def test_reserved_prefix_input_column_raises(spark):
+    """An input column named like the pipeline's own ``_cp_`` working
+    columns would be hidden from keepers and dropped from the output, so
+    ``apply`` (and ``run``) refuse it."""
+    docs = _docs(spark).withColumn("_cp_note", F.lit("x"))
+    pipe = CurationPipeline(_stages())
+    for call in (pipe.apply, pipe.run):
+        with pytest.raises(ValueError, match="_cp_note"):
+            call(docs)
+    # the prefix only: a column that merely contains it is fine
+    assert "x_cp_note" in pipe.apply(docs.withColumnRenamed("_cp_note", "x_cp_note")).columns
+
+
 @pytest.mark.parametrize("seed", [3, 17, 41])
 def test_pipeline_random_funnels_match_naive(spark, seed):
     """Seeded random corpora × random gate thresholds / keeper placement —

@@ -304,6 +304,57 @@ def test_write_lineage_from_footers_matches_partition_rows(spark, tmp_path):
     assert all(r.rows_out > 0 for r in lin)  # empty partitions absent
 
 
+def test_write_table_reader_schema_equals_inferred(spark, tmp_path):  # noqa: F811
+    """write_table returns a reader with the written schema given, which
+    must be the schema inference gives: non-nullable top-level, struct
+    and array fields all read back nullable."""
+    from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
+
+    schema = StructType(
+        [
+            StructField("url_fp", LongType(), False),
+            StructField(
+                "head",
+                StructType(
+                    [
+                        StructField("title", StringType(), False),
+                        StructField("inner", StructType([StructField("n", LongType(), False)]), False),
+                    ]
+                ),
+                False,
+            ),
+            StructField("links", ArrayType(StringType(), False), False),
+        ]
+    )
+    df = spark.createDataFrame([(1, ("t", (2,)), ["a"]), (2, ("u", (3,)), [])], schema)
+    assert not df.schema["url_fp"].nullable
+    store = WaveStore(spark, str(tmp_path / "s"))
+    reader = store.write_table("results", 0, df)
+    inferred = spark.read.parquet(store._staging_path("results", 0)).schema
+    assert reader.schema == inferred
+    assert sorted(reader.collect()) == sorted(spark.read.parquet(store._staging_path("results", 0)).collect())
+
+
+def test_write_lineage_starts_no_spark_job(spark, tmp_path):  # noqa: F811
+    """write_lineage records its fixed schema without a Spark read: no job
+    runs, and the recorded schema is the one Spark reads back."""
+    store = WaveStore(spark, str(tmp_path / "s"))
+    store.write_table("results", 0, spark.range(10).repartition(2))
+    sc = spark.sparkContext
+    group = "write-lineage-no-job"
+    sc.setJobGroup(group, "write_lineage")
+    try:
+        store.write_lineage(0, "results")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are delivered async
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+    marker = store.commit(0)
+    read = spark.read.parquet(store._table_path("lineage", 0)).schema
+    assert marker["schemas"]["lineage"] == read.json()
+
+
 def test_commit_marker_records_schemas_and_uniform_read_skips_mergeschema(
     spark, tmp_path, monkeypatch
 ):
