@@ -226,7 +226,9 @@ def _prepare_seeds(seeds: DataFrame, need_path_keys: bool = False) -> DataFrame:
         df = df.withColumn("path_key", F.lpad(seed_rank.cast("string"), 6, "0"))
     else:
         df = df.withColumn("path_key", F.lit(""))
-    # dedup by fingerprint via hash agg (all columns derive from url)
+    # dedup by fingerprint (all columns derive from url): a sort
+    # aggregation, a Sort on each side of the exchange, because min_by
+    # over a struct of strings has no fixed-width buffer for a hash agg
     row = F.struct("url", "host", "depth", "score", "parent_url", "enqueue_wave", "path_key")
     return (
         df.groupBy("url_fp")
@@ -436,10 +438,10 @@ def _discover(
         cand = _apply_host_prior(cand, host_prior, config.host_prior_weight)
     if config.score_threshold is not None:
         cand = cand.where(F.col("score") >= config.score_threshold)
-    # first-wins dedup as a hash aggregation (min_by with the lexicographic
-    # discovery-order key) — map-side partial agg, no sort-based window; on
-    # a 20M-link wave this is the difference between a hash shuffle and a
-    # full sort
+    # first-wins dedup as an aggregation (min_by with the lexicographic
+    # discovery-order key): map-side partial agg, no window. It plans as a
+    # sort aggregate (a Sort on each side of the exchange), because min_by
+    # over a struct of strings has no fixed-width buffer for a hash agg
     if config.strategy == "dfs":
         # DFS first-discovery = smallest preorder path
         order_key = F.struct(F.col("path_key"))
@@ -748,8 +750,9 @@ def run_crawl(
             wave = steps_done = total_attempted = 0
             frontier_total = None  # unknown until the first footer count lands
             # wave 0 reuses the seed frontier three times (politeness
-            # pending, seen anti-join, frontier_delta union); the longest
-            # prefetch, so it starts first
+            # pending, seen anti-join, frontier_delta union). It starts
+            # first: the robots compile is now the longest prefetch, but
+            # starting that one first measured no gain
             seed_delta = persist_and_fill(
                 "seeds", _prepare_seeds(seeds, need_path_keys=(config.strategy == "dfs"))
             )

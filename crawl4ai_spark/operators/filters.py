@@ -22,7 +22,7 @@ import re
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from crawl4ai_spark.functions.urlnorm import host_col
+from crawl4ai_spark.functions.urlnorm import ascii_lower, host_col
 
 
 def _path_col(url_col: Column) -> Column:
@@ -86,7 +86,7 @@ EXTENSION_RE = r"\.([A-Za-z0-9]{1,5})$"
 
 def url_extension_col(url_col: Column) -> Column:
     """Lower-cased path extension ('' when extensionless)."""
-    return F.lower(F.regexp_extract(_path_col(url_col), EXTENSION_RE, 1))
+    return ascii_lower(F.regexp_extract(_path_col(url_col), EXTENSION_RE, 1))
 
 
 def compile_content_type_filter(allowed_extensions: frozenset[str] | set[str]):

@@ -306,8 +306,10 @@ def host_authority_prior(
 ) -> DataFrame:
     """Roll URL-level link-graph scores up to a ``(host, prior)`` frame
     for ``CrawlConfig.host_prior``: PageRank rank (or HITS authority)
-    per URL node, summed by host and min-max scaled to [0, 1] so
-    ``host_prior_weight`` has a stable meaning across graph sizes.
+    per URL node, summed by host and divided by the largest host's sum,
+    so ``host_prior_weight`` has a stable meaning across graph sizes and
+    an observed weak host keeps a prior above 0, apart from an unknown
+    host (no row, no boost).
     Edges are URL→URL (e.g. the crawl store's ``parent_url``/``url``
     pairs or extracted-link pairs); hosts come from the frontier's own
     canonical host rule (lowercased authority). The output is
@@ -329,17 +331,12 @@ def host_authority_prior(
         .groupBy(host.alias("host"))
         .agg(F.sum("s").alias("_raw"))
     )
-    bounds = by_host.agg(
-        F.min("_raw").alias("_lo"), F.max("_raw").alias("_hi")
-    )
+    top = by_host.agg(F.max("_raw").alias("_hi"))
     return (
-        by_host.crossJoin(F.broadcast(bounds))
+        by_host.crossJoin(F.broadcast(top))
         .select(
             "host",
-            F.when(
-                F.col("_hi") > F.col("_lo"),
-                F.round((F.col("_raw") - F.col("_lo")) / (F.col("_hi") - F.col("_lo")), 9),
-            )
+            F.when(F.col("_hi") > 0, F.round(F.col("_raw") / F.col("_hi"), 9))
             .otherwise(F.lit(1.0))
             .alias("prior"),
         )

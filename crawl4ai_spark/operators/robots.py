@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from crawl4ai_spark.functions.urlnorm import ascii_lower
+
 ROBOTS_TTL_DAYS = 7
 
 RULES_SCHEMA = (
@@ -262,7 +264,7 @@ def _verdict_stages(url: Column) -> list[tuple[str, Column]]:
     return [
         ("_rb_u", F.when(has, F.url_decode(escaped))),
         ("_rb_s", F.when(has, stripped)),
-        ("_rb_sch", F.when(has, F.lower(F.regexp_extract("_rb_s", f"^({_SCHEME}):", 1)))),
+        ("_rb_sch", F.when(has, ascii_lower(F.regexp_extract("_rb_s", f"^({_SCHEME}):", 1)))),
         ("_rb_r", F.when(has, F.regexp_replace("_rb_s", f"^{_SCHEME}:", ""))),
         ("_rb_n", F.when(has, netloc)),
         ("_rb_x", F.when(has, raises)),

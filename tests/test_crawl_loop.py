@@ -499,7 +499,9 @@ def test_host_prior_steers_budgeted_selection_and_preserves_seen_set(
 
 
 def test_host_authority_prior_rollup(spark):
-    from crawl4ai_spark.operators.graph import host_authority_prior
+    from urllib.parse import urlsplit
+
+    from crawl4ai_spark.operators.graph import hits, host_authority_prior, pagerank
 
     edges = [
         ("http://big.test/a", "http://big.test/b"),
@@ -508,11 +510,21 @@ def test_host_authority_prior_rollup(spark):
         ("http://small.test/x", "http://small.test/y"),
     ]
     df = spark.createDataFrame(edges, "src string, dst string")
-    for kind in ("pagerank", "hits"):
+    node_scores = {
+        "pagerank": pagerank(df, iters=3).select("node", F.col("rank").alias("s")),
+        "hits": hits(df, iters=3).select("node", F.col("authority").alias("s")),
+    }
+    for kind, scores in node_scores.items():
         out = {r["host"]: r["prior"] for r in host_authority_prior(df, kind=kind).collect()}
-        assert set(out) == {"big.test", "small.test"}
-        # min-max scaled: the dominant host pins 1.0, the other 0.0
-        assert out["big.test"] == 1.0 and out["small.test"] == 0.0
+        by_host = {}
+        for r in scores.collect():
+            host = urlsplit(r.node).hostname
+            by_host[host] = by_host.get(host, 0.0) + r.s
+        top = max(by_host.values())
+        # scaled by the largest host only: the dominant host pins 1.0 and
+        # the observed weak host keeps its ratio, above an unknown host's 0
+        assert out == {h: round(v / top, 9) for h, v in by_host.items()}, kind
+        assert out["big.test"] == 1.0 and 0.0 < out["small.test"] < 1.0, out
     with pytest.raises(ValueError):
         host_authority_prior(df, kind="degree")
 
