@@ -62,7 +62,7 @@ from crawl4ai_spark.operators.bloom import bloom_prefilter, build_bloom_shards
 from crawl4ai_spark.operators.politeness import (
     dfs_order,
     fair_wave_order,
-    flag_global_top_k,
+    global_top_k,
     rank_by_host_budget,
     update_host_state,
     wave_order,
@@ -136,10 +136,6 @@ class CrawlConfig:
     n_bloom_shards: int = 16
     bloom_fpp: float = 0.01
     user_agent: str = "*"
-    # hot-host salting: shards the per-host politeness rank into this many
-    # salted partial top-ks before the exact rank (defuses 10^8-row hosts);
-    # None/1 = plain rank (fine until a single host dwarfs a partition)
-    salt_partitions: int | None = None
     # traversal strategy: "bfs" (level order) or "dfs" (preorder via
     # lexicographic path keys — exact DFS when the wave size is 1, a
     # parallel-DFS approximation otherwise; SURVEY §2.3)
@@ -577,17 +573,15 @@ def _step(
         order = fair_wave_order(wave, config.fairness_boost)
     else:
         order = None
-    ranked = rank_by_host_budget(
+    wave_sel = rank_by_host_budget(
         pending,
         host_budgets,
         config.default_budget,
         host_state=host_state,
         global_limit=wave_limit,
         order=order,
-        salt_partitions=config.salt_partitions,
         pending_hint=pending_hint,
     )
-    wave_sel = ranked.where(F.col("selected")).drop("selected")
     wave_sel = robots_gate(wave_sel, rules)
     fetched = wave_sel.join(pages, "url", "left")
     # optional status_code column drives the throttle path (429/503 →
@@ -648,16 +642,12 @@ def _step(
         # discoveries dedup exactly against the band's own deltas
         fresh = fresh.join(s.fresh.select("url_fp"), "url_fp", "left_anti")
     if remaining is not None:
-        # tiered global top-k (see flag_global_top_k): the narrow discovery
-        # frame is cached so the elision count and the frontier write share
-        # one computation of discover+anti-join
+        # global_top_k keeps the first `remaining` discoveries in wave
+        # order: the narrow discovery frame is cached so its elision count
+        # and the frontier write share one computation of discover+anti-join
         cand = fresh.localCheckpoint() if eager else fresh.persist()
         cached.append(cand)
-        fresh = (
-            flag_global_top_k(cand, wave_order(), max(remaining, 0), n_rows=cand.count())
-            .where(F.col("_topk"))
-            .drop("_topk")
-        )
+        fresh = global_top_k(cand, wave_order(), max(remaining, 0), n_rows=cand.count())
     if eager:
         # later steps' pending must not replay (or even re-plan) discovery
         fresh = fresh.localCheckpoint()
@@ -784,12 +774,17 @@ def run_crawl(
                 store.marker(w)["counts"].get("frontier_delta", 0) for w in committed
             )
         # the robots rules compile once per crawl (a Python UDF over the
-        # host rows; every wave decides its URLs in the JVM)
+        # host rows; every wave decides its URLs in the JVM). Each frame
+        # holds one row per host (compile_robots keeps one), or a
+        # listed-twice host's URLs would be selected twice by the wave's
+        # broadcast joins
         rules = budgets = prior = None
         if robots is not None:
             rules = persist_and_fill("robots", compile_robots(robots, config.user_agent))
         if host_budgets is not None:
-            budgets = persist_and_fill("host_budgets", host_budgets.select("host", "budget"))
+            budgets = persist_and_fill(
+                "host_budgets", host_budgets.groupBy("host").agg(F.min("budget").alias("budget"))
+            )
         if config.host_prior is not None:
             prior = persist_and_fill("host_prior", _per_host_prior(config.host_prior))
         while steps_done < config.max_waves:
@@ -812,7 +807,7 @@ def run_crawl(
                         break
                 # |pending| from accumulated footer counts (attempted ⊆
                 # frontier, both unique by url_fp) — exact before a band's
-                # first step; lets the global cap elide its windows once
+                # first step; lets the global cap elide its sort once
                 # pending fits the remaining budget
                 exact = frontier_total is not None and not band
                 hint = frontier_total - total_attempted if exact else None

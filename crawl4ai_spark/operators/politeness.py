@@ -10,14 +10,18 @@ budget 0 for ``cooldown_waves`` waves. The equivalence contract (SURVEY.md
 §7): under budget b, the multiset of (host, wave#) fetch assignments
 matches the reference's (host, ⌊t/Δ⌋) schedule.
 
+Wave selection is one window and Spark's own top-k:
+``row_number() over (partition by host order by …) <= budget``, then, for
+a ``max_pages`` cap, ``global_top_k`` (``TakeOrderedAndProject``, or a
+range rank for huge k).
+
 Scale notes (100 TB / 10^10 URLs):
-- The window partitions by ``host``. We ``repartition(host)`` first, so the
-  window itself adds no second shuffle and every later groupBy(host) in the
-  wave reuses the same hash partitioning.
-- Hot hosts (frontier skew) are bounded by construction: rank ≤ budget cuts
-  each host's contribution to at most ``budget`` rows *before* any further
-  join, so a 10^8-row host cannot bloat a wave. AQE skew-join handles the
-  residual skew of the rank input.
+- The window partitions by ``host``. We ``repartition(host)`` first and
+  the budget and cooldown joins are broadcasts, so a wave's selection
+  plans exactly one exchange and reads ``pending`` once.
+- A hot host's rows sort in one task (a window cannot split its partition
+  key); rank ≤ budget then cuts each host to at most ``budget`` rows
+  *before* any further join, so a 10^8-row host cannot bloat a wave.
 - ``host_budgets`` is a small dimension → broadcast join.
 """
 
@@ -25,6 +29,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# global_top_k: the largest k merged in one task (above it, the range rank)
+SMALL_K_MAX = 200_000
+# global_top_k: range partitions of the large-k rank
+RANGE_PARTITIONS = 32
+
 
 def wave_order():
     """Deterministic total wave-selection order (score desc, depth, url)."""
@@ -50,59 +60,40 @@ def dfs_order():
     return [F.asc("path_key"), F.asc("url")]
 
 
-def flag_global_top_k(
-    df: DataFrame,
-    order: list,
-    k: int,
-    salt_partitions: int = 32,
-    flag: str = "_topk",
-    n_rows: int | None = None,
-    small_k_max: int = 200_000,
-) -> DataFrame:
-    """Deterministic global top-k WITHOUT a single-partition window over
-    the full set. ``order`` must be a total order (ours ends in ``url``)
-    so the result is run-independent. Three tiers, identical selection:
+def global_top_k(df: DataFrame, order: list, k: int, n_rows: int | None = None) -> DataFrame:
+    """The first ``k`` rows of ``df`` under ``order``, which must be a
+    total order (ours ends in ``url``) so the result is run-independent.
+    Three cases, identical selection:
 
     - **Elision** — when the candidate count (``n_rows``, passed by the
       caller from footer/accumulated counts or computed here with one
-      narrow agg) is ≤ k, every row survives: no window, no sort at all.
-      This is the common case late in a crawl (candidates ≤ remaining
-      budget).
-    - **Small k** — two-phase salted rank: phase 1 ranks within
-      ``salt_partitions`` shards keyed on ``url_fp`` (any true global
-      top-k row is top-k within its shard, so no survivor is lost) and
-      keeps ≤ k per shard; phase 2 ranks the ≤ salt×k survivors exactly.
-      The only unpartitioned window runs over that bounded set.
-    - **Large k** (> ``small_k_max``, where salt×k through one task would
-      itself be a 10⁸-row straggler sort) — exact distributed rank:
-      range-repartition by ``order`` (sampled boundaries → distributed
-      sort, no funnel), per-partition row offsets from
-      ``monotonically_increasing_id`` on the persisted sorted layout,
-      partition sizes prefix-summed driver-side (``salt_partitions``
+      narrow agg) is ≤ k, every row survives: no sort at all. This is the
+      common case late in a crawl (candidates ≤ remaining budget).
+    - **Small k** (≤ ``SMALL_K_MAX``) — ``orderBy().limit()``, which Spark
+      plans as ``TakeOrderedAndProject``: a top-k per partition, then one
+      task merges the ≤ partitions×k survivors.
+    - **Large k** — exact distributed rank, where even that merge would
+      be a straggler sort: range-repartition by ``order`` (sampled
+      boundaries → distributed sort, no funnel), per-partition row offsets
+      from ``monotonically_increasing_id`` on the persisted sorted layout,
+      partition sizes prefix-summed driver-side (``RANGE_PARTITIONS``
       integers), global rank = prefix[pid] + offset. No task ever holds
       more than ~n/P rows.
     """
     if k <= 0:
-        return df.withColumn(flag, F.lit(False))
+        return df.limit(0)
     if n_rows is None:
         n_rows = df.count()
     if n_rows <= k:
-        return df.withColumn(flag, F.lit(True))
-    if k <= small_k_max:
-        salt = F.pmod(F.coalesce(F.col("url_fp"), F.lit(0)), F.lit(salt_partitions))
-        shard_window = Window.partitionBy(salt).orderBy(*order)
-        df = df.withColumn("_gpr", F.row_number().over(shard_window))
-        survivors = df.where(F.col("_gpr") <= k)
-        overflow = df.where(F.col("_gpr") > k).withColumn(flag, F.lit(False))
-        exact = Window.orderBy(*order)
-        survivors = survivors.withColumn(flag, F.row_number().over(exact) <= k)
-        return survivors.unionByName(overflow).drop("_gpr")
+        return df
+    if k <= SMALL_K_MAX:
+        return df.orderBy(*order).limit(k)
 
-    # large-k exact distributed rank (persisted so the id column is stable
-    # between the offset job and the flag projection; ContextCleaner
-    # reclaims the cache entry when the frame is garbage collected)
+    # persisted so the id column is stable between the offset job and the
+    # filter; ContextCleaner reclaims the cache entry when the frame is
+    # garbage collected
     ranged = (
-        df.repartitionByRange(salt_partitions, *order)
+        df.repartitionByRange(RANGE_PARTITIONS, *order)
         .sortWithinPartitions(*order)
         .withColumn("_mid", F.monotonically_increasing_id())
         .persist()
@@ -125,7 +116,7 @@ def flag_global_top_k(
         ]
     )
     rank = F.element_at(offset_map, pid) + F.pmod(F.col("_mid"), F.lit(1 << 33)) + 1
-    return ranged.withColumn(flag, rank <= k).drop("_mid")
+    return ranged.where(rank <= k).drop("_mid")
 
 
 def rank_by_host_budget(
@@ -135,20 +126,21 @@ def rank_by_host_budget(
     host_state: DataFrame | None = None,
     global_limit: int | None = None,
     order: list | None = None,
-    salt_partitions: int | None = None,
     pending_hint: int | None = None,
 ) -> DataFrame:
-    """Select this wave's fetch set: top-``budget(host)`` rows per host by
-    (score desc, depth, url), then an optional deterministic global cap.
+    """Select this wave's fetch set: the top-``budget(host)`` rows of each
+    host under ``order`` (default ``wave_order``), then an optional
+    deterministic global cap of ``global_limit`` rows.
 
-    Returns ``pending`` with a ``selected`` boolean; unselected rows simply
-    stay in the frontier for the next wave (no state mutation).
+    Returns only the selected rows, each with ``selected = true``;
+    unselected rows simply stay in the frontier for the next wave (no
+    state mutation).
 
     ``pending_hint``: caller-known upper bound on ``pending``'s row count
     (run_crawl derives it from accumulated parquet-footer counts — no
     job). When the bound is ≤ global_limit the global cap is vacuous and
-    the top-k flag elides every window; an over-estimate only forgoes the
-    elision, never changes the selection.
+    elides its sort; an over-estimate only forgoes the elision, never
+    changes the selection.
     """
     df = pending.repartition(F.col("host"))
     if host_budgets is not None:
@@ -170,63 +162,20 @@ def rank_by_host_budget(
         ).drop("cooldown_waves")
 
     order = order if order is not None else wave_order()
-
-    # Budget-aware rank elision: the window sort exists only to CAP
-    # over-budget hosts, so hosts whose row count fits their budget skip
-    # it entirely (selected outright). The count is a hash agg + join on
-    # the same host partitioning (no extra shuffle), and the sort — the
-    # only O(n log n) and straggler-prone step of wave selection — runs
-    # over just the over-budget hosts' rows. With generous budgets (the
-    # common crawl configuration) the wave selects with NO sort at all;
-    # selection is identical either way (rank ≤ budget is vacuous for a
-    # host with ≤ budget rows).
-    counts = df.groupBy("host").agg(F.count("*").alias("_host_n"))
-    df = df.join(counts, "host")
-    easy = df.where(F.col("_host_n") <= F.col("budget")).withColumn(
-        "selected", F.lit(True)
+    host_rank = F.row_number().over(Window.partitionBy("host").orderBy(*order))
+    df = (
+        df.withColumn("_host_rank", host_rank)
+        .where(F.col("_host_rank") <= F.col("budget"))
+        .drop("_host_rank", "budget")
     )
-    hard = df.where(F.col("_host_n") > F.col("budget"))
-
-    if salt_partitions and salt_partitions > 1:
-        # Hot-host defusal: two-phase top-k. Phase 1 ranks within
-        # (host, salt) shards — a 10^8-row host is processed by
-        # ``salt_partitions`` tasks instead of one — keeping at most
-        # ``budget`` rows per shard; phase 2 ranks the ≤ salt×budget
-        # survivors exactly. Identical selection to the unsalted rank
-        # (any true top-budget row is top-budget within its shard).
-        salt = F.pmod(F.col("url_fp"), F.lit(salt_partitions))
-        shard_window = Window.partitionBy("host", salt).orderBy(*order)
-        hard = hard.withColumn("_shard_rank", F.row_number().over(shard_window))
-        survivors = hard.where(F.col("_shard_rank") <= F.col("budget"))
-        overflow = hard.where(F.col("_shard_rank") > F.col("budget")).withColumn(
-            "selected", F.lit(False)
-        )
-        host_window = Window.partitionBy("host").orderBy(*order)
-        survivors = survivors.withColumn("host_rank", F.row_number().over(host_window))
-        survivors = survivors.withColumn("selected", F.col("host_rank") <= F.col("budget"))
-        hard = survivors.drop("host_rank").unionByName(overflow).drop("_shard_rank")
-    else:
-        host_window = Window.partitionBy("host").orderBy(*order)
-        hard = hard.withColumn("host_rank", F.row_number().over(host_window))
-        hard = hard.withColumn("selected", F.col("host_rank") <= F.col("budget"))
-        hard = hard.drop("host_rank")
-
-    df = easy.unionByName(hard).drop("_host_n")
-
     if global_limit is not None:
-        # Deterministic global cap (max_pages semantics,
-        # bfs_strategy.py:189-196): keep the top-scored remainder —
-        # two-phase so no full-wave single-partition window.
-        sel = df.where(F.col("selected")).drop("selected")
-        unsel = df.where(~F.col("selected"))
-        # no hint → skip the elision count (it would recompute the window
-        # plan) and let the tier choice run on k alone
+        # deterministic global cap (max_pages semantics,
+        # bfs_strategy.py:189-196): keep the top-ordered remainder. No
+        # hint → skip the elision count (it would run the window plan)
+        # and let the case choice run on k alone
         hint = pending_hint if pending_hint is not None else global_limit + 1
-        sel = flag_global_top_k(
-            sel, order, global_limit, flag="selected", n_rows=hint
-        )
-        df = sel.unionByName(unsel)
-    return df.drop("budget")
+        df = global_top_k(df, order, global_limit, n_rows=hint)
+    return df.withColumn("selected", F.lit(True))
 
 
 def update_host_state(

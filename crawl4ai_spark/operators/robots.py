@@ -37,7 +37,7 @@ import re
 from urllib.robotparser import RobotFileParser, RuleLine
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
@@ -150,11 +150,25 @@ def _compile_udf(user_agent: str):
 def compile_robots(robots: DataFrame, user_agent: str = "*") -> DataFrame:
     """``robots(host, rules_text[, fetch_time])`` → ``(host[, fetch_time],
     robots)`` with ``robots`` the compiled rules struct (NULL = allow
-    all). One Python call per host row; cache it for the crawl."""
-    keep = ["host", *(["fetch_time"] if "fetch_time" in robots.columns else [])]
-    return robots.select(
-        *keep,
-        F.from_json(_compile_udf(user_agent)(F.col("rules_text")), RULES_SCHEMA).alias("robots"),
+    all). One Python call per host row; cache it for the crawl.
+
+    One row per host: a host listed twice keeps its latest ``fetch_time``,
+    then its smallest ``rules_text``, so it cannot fan its URLs out into
+    two rows of a wave's robots join. The rows compile before that choice,
+    so the Python worker starts in the first stage, not after a shuffle."""
+    timed = "fetch_time" in robots.columns
+    keep = ["host", *(["fetch_time"] if timed else [])]
+    order = ([F.col("fetch_time").desc_nulls_last()] if timed else []) + [F.asc("rules_text")]
+    first = F.row_number().over(Window.partitionBy("host").orderBy(*order))
+    return (
+        robots.select(
+            *keep,
+            "rules_text",
+            F.from_json(_compile_udf(user_agent)(F.col("rules_text")), RULES_SCHEMA).alias("robots"),
+        )
+        .withColumn("_first", first)
+        .where(F.col("_first") == 1)
+        .select(*keep, "robots")
     )
 
 

@@ -202,7 +202,7 @@ CHECKS = {
         ("HashAggregate", "distinct fingerprint set as hash agg"),
         ("!ArrowEvalPython", "md5 + window minima JVM-side"),
     ],
-    "span_dedup": [
+    "span_substring_dedup": [
         ("Generate", "native posexplode of the span arrays (no Python tokenizer)"),
         ("!ArrowEvalPython", "whole pipeline JVM-side"),
         ("SortAggregate", "keeper = min(struct(id,pos)) with map-side partial (one row per span per map partition crosses the wire)"),
@@ -269,32 +269,38 @@ def _revisit_seeds_plan(spark, sf_dir):
 
 
 def _politeness_cap_plan(spark, sf_dir):
-    """Not a queries() entry: the two-phase global max_pages cap — the
-    wave's only unpartitioned Window must consume the bounded survivor
-    set of the salted partial rank, never the full frontier."""
+    """Not a queries() entry: wave selection with a max_pages cap — one
+    window partitioned by host, then Spark's own top-k
+    (TakeOrderedAndProject); nothing funnels the frontier through one
+    partition."""
     from crawl4ai_spark.operators.politeness import rank_by_host_budget
 
     return rank_by_host_budget(_pending_frame(spark), None, 50, global_limit=1000)
 
 
 def _topk_elided_plan(spark, sf_dir):
-    """Count-elision tier: candidate count (from footer-derived hints) fits
-    k — the flag must compile to a pure projection: no Window, no Sort."""
-    from crawl4ai_spark.operators.politeness import flag_global_top_k, wave_order
+    """Count-elision case: candidate count (from footer-derived hints) fits
+    k — the top-k is the input itself: no Window, no Sort."""
+    from crawl4ai_spark.operators.politeness import global_top_k, wave_order
 
-    return flag_global_top_k(_pending_frame(spark), wave_order(), 10**9, n_rows=100_000)
+    return global_top_k(_pending_frame(spark), wave_order(), 10**9, n_rows=100_000)
 
 
 def _topk_large_k_plan(spark, sf_dir):
-    """Large-k tier: exact distributed range-rank — the flag reads the
+    """Large-k case (k above ``SMALL_K_MAX``, lowered here so a small frame
+    takes it): exact distributed range rank — the filter reads the
     persisted range-sorted layout (InMemoryTableScan) and computes the
     global rank from driver prefix sums; no window of ANY kind."""
-    from crawl4ai_spark.operators.politeness import flag_global_top_k, wave_order
+    from crawl4ai_spark.operators import politeness
 
-    return flag_global_top_k(
-        _pending_frame(spark, n=20_000), wave_order(), 2_000,
-        salt_partitions=8, small_k_max=100,
-    )
+    small_k_max = politeness.SMALL_K_MAX
+    politeness.SMALL_K_MAX = 100
+    try:
+        return politeness.global_top_k(
+            _pending_frame(spark, n=20_000), politeness.wave_order(), 2_000
+        )
+    finally:
+        politeness.SMALL_K_MAX = small_k_max
 
 
 EXTRA_PLANS = {
@@ -306,25 +312,25 @@ EXTRA_PLANS = {
             ("!windowspecdefinition", "no window anywhere in the queue build"),
         ],
     ),
-    "politeness_two_phase_cap": (
+    "politeness_cap": (
         _politeness_cap_plan,
         [
-            ("pmod(url_fp", "salt key projected for the phase-1 shards"),
-            ("windowspecdefinition(_w0", "phase-1 rank partitioned by the salt"),
-            ("<= 1000", "phase-1 keeps <= k rows per shard before the exact rank"),
+            ("windowspecdefinition(host#", "the per-host rank is partitioned by host"),
+            ("TakeOrderedAndProject", "the max_pages cap is Spark's top-k, not a global window"),
+            ("!SinglePartition", "no window without a partition key (it would need a single-partition exchange)"),
         ],
     ),
     "global_topk_elided": (
         _topk_elided_plan,
         [
             ("!Window", "no window when candidates fit k"),
-            ("!Sort", "no sort either — the flag is a literal projection"),
+            ("!Sort", "no sort either — the input passes through"),
         ],
     ),
     "global_topk_large_k_range_rank": (
         _topk_large_k_plan,
         [
-            ("InMemoryTableScan", "persisted range-sorted layout reused (offsets job + flag share it)"),
+            ("InMemoryTableScan", "persisted range-sorted layout reused (offsets job + filter share it)"),
             ("!windowspecdefinition", "no window on the large-k path — rank = prefix[pid] + offset"),
         ],
     ),

@@ -135,6 +135,120 @@ def test_max_pages_budget(spark, site, site_dir, tmp_path):
     assert got == ref["attempted"]
 
 
+@pytest.mark.parametrize("table", ["robots", "host_budgets"])
+def test_duplicate_host_rows_attempt_each_url_once(spark, site, site_dir, tmp_path, table):
+    """A host listed twice in ``robots`` or ``host_budgets`` is reduced to
+    one row (the latest robots entry, the smallest budget): no URL is
+    attempted twice, and the crawl equals that of the deduplicated input."""
+    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+    if table == "robots":
+        stale = robots.withColumn("fetch_time", F.col("fetch_time") - F.expr("INTERVAL 1 HOUR"))
+        stale = stale.withColumn("rules_text", F.lit("User-agent: *\nDisallow: /"))
+        robots = robots.unionByName(robots).unionByName(stale)
+    else:
+        budgets = budgets.unionByName(budgets).unionByName(
+            budgets.withColumn("budget", F.col("budget") + 50)
+        )
+    store_dir = str(tmp_path / f"store_dup_{table}")
+    config = CrawlConfig(max_depth=2, content_mode="links", n_bloom_shards=4)
+    summary = run_crawl(spark, pages, seeds, store_dir, config, robots=robots, host_budgets=budgets)
+
+    attempted = (
+        WaveStore(spark, store_dir).read_table("results")
+        .where(F.col("status") != "throttled").select("url").collect()
+    )
+    assert summary["total_attempted"] == len({r.url for r in attempted}) == len(attempted)
+    budget_map = {r["host"]: r["budget"] for r in site["host_budgets"]}
+    ref = _reference(site, budgets=budget_map, max_depth=2)
+    got_waves = _spark_waves(spark, store_dir)
+    assert [w["attempted"] for w in got_waves] == [w["attempted"] for w in ref["waves"]]
+
+
+def test_wave_selection_plans_one_host_exchange(spark, site_dir, tmp_path, monkeypatch):
+    """Wave selection reads ``pending`` once: the work plan of wave 1 of a
+    budgeted crawl holds one exchange on host and one anti-join against
+    the attempted keys, and a ``max_pages`` cap is Spark's top-k with no
+    window outside the per-host one."""
+    import io
+    import re
+    from contextlib import redirect_stdout
+
+    from crawl4ai_spark.frontier import bfs
+    from crawl4ai_spark.operators.politeness import rank_by_host_budget
+
+    def plan_of(df):
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            df.explain()
+        return buf.getvalue()
+
+    plans = []
+    wave_work = bfs._wave_work
+
+    def recording_wave_work(fetched, mode, config):
+        work = wave_work(fetched, mode, config)
+        plans.append(plan_of(work))
+        return work
+
+    monkeypatch.setattr(bfs, "_wave_work", recording_wave_work)
+    pages, seeds, _, budgets = _inputs(spark, site_dir)
+    run_crawl(
+        spark, pages, seeds, str(tmp_path / "store_plan"),
+        CrawlConfig(max_depth=3, content_mode="links", max_waves=2, n_bloom_shards=4),
+        host_budgets=budgets,
+    )
+    assert len(plans) == 2
+    # the cached budgets frame prints its own per-host aggregation, whose
+    # exchange on host is an ENSURE_REQUIREMENTS one
+    host_repartitions = re.findall(
+        r"Exchange hashpartitioning\(host#\d+, \d+\), REPARTITION_BY_COL", plans[1]
+    )
+    assert len(host_repartitions) == 1, plans[1]
+    assert plans[1].count("LeftAnti") == 1, plans[1]
+
+    pending = bfs._prepare_seeds(seeds)
+    capped = plan_of(rank_by_host_budget(pending, budgets, 5, global_limit=3))
+    assert "TakeOrderedAndProject" in capped, capped
+    window_keys = re.findall(r"windowspecdefinition\((\w+)#", capped)
+    assert window_keys and set(window_keys) == {"host"}, capped
+
+
+def test_fairness_boost_rescues_starving_seed(spark, tmp_path):
+    """``CrawlConfig.fairness_boost`` in the loop: on a budget-1 host a
+    low-priority seed (score 0) starves behind a chain of fresh
+    discoveries (score 1) under the default order. Aged by 0.4 per wave
+    it outranks the chain at wave 3 (0.4 * 3 = 1.2 > 1; 0.8 < 1 at wave 2)."""
+    chain = [f"http://a.test/c{i}" for i in range(1, 7)]
+
+    def page(link=None):
+        body = f'<a href="{link}">next</a>' if link else ""
+        return f"<html><body>{body}</body></html>".encode()
+
+    rows = [("http://a.test/hi", page(chain[0])), ("http://a.test/low", page())]
+    rows += [(u, page(n)) for u, n in zip(chain, chain[1:] + [None])]
+    pages = spark.createDataFrame(rows, "url string, html binary")
+    seeds = spark.createDataFrame(
+        [("http://a.test/hi", 1.0), ("http://a.test/low", 0.0)], "url string, priority double"
+    )
+
+    def low_wave(boost):
+        store_dir = str(tmp_path / f"store_fair_{boost}")
+        config = CrawlConfig(
+            max_depth=10, content_mode="links", use_bloom=False, default_budget=1,
+            fairness_boost=boost,
+        )
+        run_crawl(spark, pages, seeds, store_dir, config)
+        waves = {
+            r.url: r.wave
+            for r in WaveStore(spark, store_dir).read_table("results").collect()
+        }
+        assert len(waves) == len(rows)
+        return waves["http://a.test/low"]
+
+    assert low_wave(None) == 7  # hi, c1..c6, then low
+    assert low_wave(0.4) == 3
+
+
 def test_full_extraction_mode_writes_markdown(spark, site, site_dir, tmp_path):
     pages, seeds, _, _ = _inputs(spark, site_dir)
     store_dir = str(tmp_path / "store_full")

@@ -247,32 +247,104 @@ def test_best_first_scorer_orders_frontier(spark, tmp_path):
     assert waves["http://site0.com/cat1/"] < waves["http://site0.com/cat0/"]
 
 
-def test_salted_rank_equals_unsalted(spark):
-    """Two-phase salted top-k must select exactly the same rows as the
-    plain per-host rank (hot host with 500 rows, budget 7)."""
-    from pyspark.sql import functions as F
+_PENDING_SCHEMA = (
+    "url string, url_fp long, host string, depth int, score double, "
+    "parent_url string, enqueue_wave int, path_key string"
+)
 
-    from crawl4ai_spark.operators.politeness import rank_by_host_budget
 
-    rows = []
-    for i in range(500):
-        rows.append((f"http://hot.com/p{i:04d}", i * 7919 % 100003, "hot.com", i % 4, float(i % 13), None, 0, ""))
-    for i in range(40):
-        rows.append((f"http://cold{i}.com/", 10**6 + i, f"cold{i}.com", 0, 1.0, None, 0, ""))
-    pending = spark.createDataFrame(
-        rows,
-        "url string, url_fp long, host string, depth int, score double, parent_url string, enqueue_wave int, path_key string",
+def _python_wave_selection(rows, budgets, default_budget, cooldowns, global_limit, order_key):
+    """Pure-Python wave selection: per host, the first ``budget`` rows
+    under ``order_key`` (budget 0 while the host's cooldown is not 0),
+    then the first ``global_limit`` of those under the same key."""
+    by_host = {}
+    for r in rows:
+        by_host.setdefault(r[2], []).append(r)
+    picked = []
+    for host, host_rows in by_host.items():
+        budget = 0 if cooldowns.get(host, 0) != 0 else budgets.get(host, default_budget)
+        picked += sorted(host_rows, key=order_key)[:budget]
+    if global_limit is not None:
+        picked = sorted(picked, key=order_key)[:global_limit]
+    return {r[0] for r in picked}
+
+
+def test_rank_by_host_budget_matches_python_selection(spark, monkeypatch):
+    """Seeded random frontiers: the one-window rank plus the global top-k
+    select exactly what a pure-Python per-host sort selects, under each
+    of the three wave orders, with budgets, cooldowns (-1/0/2), caps,
+    pending hints and every top-k case (elided, small k, range rank).
+    The first trial keeps a hot host of 500 rows under budget 7."""
+    import random
+
+    from crawl4ai_spark.operators import politeness
+    from crawl4ai_spark.operators.politeness import (
+        dfs_order,
+        fair_wave_order,
+        rank_by_host_budget,
+        wave_order,
     )
-    budgets = spark.createDataFrame([("hot.com", 7)], "host string, budget int")
 
-    def selected(salt):
-        df = rank_by_host_budget(pending, budgets, default_budget=3, salt_partitions=salt)
-        return {r.url for r in df.where(F.col("selected")).collect()}
+    orders = {
+        "wave": (lambda w: wave_order(), lambda w: lambda r: (-r[4], r[3], r[0])),
+        "fair": (
+            lambda w: fair_wave_order(w, 0.3),
+            lambda w: lambda r: (-(r[4] + 0.3 * (w - r[6])), r[6], r[3], r[0]),
+        ),
+        "dfs": (lambda w: dfs_order(), lambda w: lambda r: (r[7], r[0])),
+    }
+    rng = random.Random(20261018)
+    for trial in range(12):
+        hosts = [f"h{i}.test" for i in range(rng.randint(1, 6))]
+        rows = []
+        for i in range(rng.randint(1, 120)):
+            host = rng.choice(hosts)
+            rows.append((
+                f"http://{host}/p{i:04d}", rng.randrange(10**6), host, rng.randint(0, 3),
+                float(rng.randint(0, 4)), None, rng.randint(0, 5),
+                ".".join(f"{rng.randint(0, 9):04d}" for _ in range(rng.randint(1, 3))),
+            ))
+        budgets = {h: rng.randint(0, 10) for h in hosts if rng.random() < 0.5}
+        default_budget = rng.randint(1, 5)
+        cooldowns = {h: rng.choice([-1, 0, 2]) for h in hosts if rng.random() < 0.4}
+        global_limit = rng.choice([None, 0, 5, 50, 10**4])
+        if trial == 0:
+            rows += [
+                (f"http://hot.com/p{i:04d}", i * 7919 % 100003, "hot.com", i % 4,
+                 float(i % 13), None, 0, "")
+                for i in range(500)
+            ]
+            budgets["hot.com"] = 7
+            global_limit = None
+        name = ("wave", "fair", "dfs")[trial % 3]
+        wave = rng.randint(0, 8)
+        order, key = orders[name][0](wave), orders[name][1](wave)
+        hint = rng.choice([None, len(rows), len(rows) + 10])
+        monkeypatch.setattr(politeness, "SMALL_K_MAX", rng.choice([200_000, 3]))
 
-    plain = selected(None)
-    salted = selected(8)
-    assert plain == salted
-    assert len([u for u in plain if "hot.com" in u]) == 7
+        pending = spark.createDataFrame(rows, _PENDING_SCHEMA)
+        budget_df = (
+            spark.createDataFrame(list(budgets.items()), "host string, budget int")
+            if budgets else None
+        )
+        state_df = (
+            spark.createDataFrame(
+                [(h, 1.0, 0, c) for h, c in cooldowns.items()],
+                "host string, current_delay double, fail_count int, cooldown_waves int",
+            )
+            if cooldowns else None
+        )
+        got = rank_by_host_budget(
+            pending, budget_df, default_budget, host_state=state_df,
+            global_limit=global_limit, order=order, pending_hint=hint,
+        ).collect()
+        want = _python_wave_selection(
+            rows, budgets, default_budget, cooldowns, global_limit, key
+        )
+        assert all(r.selected for r in got)
+        assert {r.url for r in got} == want, (trial, name, global_limit)
+        if trial == 0:
+            assert len([r for r in got if r.host == "hot.com"]) == 7
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
@@ -406,11 +478,11 @@ def test_retired_host_gets_zero_budget(spark):
 
 
 def test_global_top_k_two_phase_exact(spark):
-    """flag_global_top_k must select exactly the true global top-k under
-    the total order, regardless of salting."""
+    """global_top_k returns exactly the true global top-k under the total
+    order, for every k: none, small, and at or above the row count."""
     from pyspark.sql import functions as F
 
-    from crawl4ai_spark.operators.politeness import flag_global_top_k, wave_order
+    from crawl4ai_spark.operators.politeness import global_top_k, wave_order
 
     rows = [
         (f"http://h{i % 17}.com/p{i:04d}", i * 7919 % 100003, f"h{i % 17}.com", i % 5, float(i % 23), None, 0, "")
@@ -420,18 +492,10 @@ def test_global_top_k_two_phase_exact(spark):
         rows,
         "url string, url_fp long, host string, depth int, score double, parent_url string, enqueue_wave int, path_key string",
     )
-    want = {
-        r.url
-        for r in df.orderBy(F.desc("score"), F.asc("depth"), F.asc("url")).limit(50).collect()
-    }
-    for salt in (4, 32):
-        got = {
-            r.url
-            for r in flag_global_top_k(df, wave_order(), 50, salt_partitions=salt)
-            .where(F.col("_topk"))
-            .collect()
-        }
-        assert got == want
+    ordered = [r.url for r in df.orderBy(F.desc("score"), F.asc("depth"), F.asc("url")).collect()]
+    for k in (0, 1, 50, 799, 800, 1000):
+        got = [r.url for r in global_top_k(df, wave_order(), k).collect()]
+        assert sorted(got) == sorted(ordered[:k]), f"k={k}"
 
 
 def test_fairness_aging_rescues_starving_url(spark):
@@ -597,14 +661,17 @@ def test_topic_segmentation_finds_vocabulary_shift(spark):
     assert len(got) == 1 and got[0].chunk == "just a few words here"
 
 
-def test_global_top_k_large_k_range_path(spark):
-    """k above small_k_max routes through the distributed range-rank tier
-    (range repartition + per-partition offsets, no salt×k single-task
-    sort); selection must still be the exact global top-k, including when
-    k greatly exceeds the per-shard survivor cap."""
+def test_global_top_k_large_k_range_path(spark, monkeypatch):
+    """k above SMALL_K_MAX routes through the distributed range rank
+    (range repartition + per-partition offsets, no single-task merge);
+    selection must still be the exact global top-k, including when k
+    spans several range partitions."""
     from pyspark.sql import functions as F
 
-    from crawl4ai_spark.operators.politeness import flag_global_top_k, wave_order
+    from crawl4ai_spark.operators import politeness
+    from crawl4ai_spark.operators.politeness import global_top_k, wave_order
+
+    monkeypatch.setattr(politeness, "SMALL_K_MAX", 10)
 
     rows = [
         (f"http://h{i % 17}.com/p{i:04d}", i * 7919 % 100003, f"h{i % 17}.com",
@@ -623,40 +690,31 @@ def test_global_top_k_large_k_range_path(spark):
             .limit(k)
             .collect()
         }
-        got = {
-            r.url
-            for r in flag_global_top_k(
-                df, wave_order(), k, salt_partitions=8, small_k_max=10
-            )
-            .where(F.col("_topk"))
-            .collect()
-        }
-        assert got == want, f"k={k}"
+        got = [r.url for r in global_top_k(df, wave_order(), k).collect()]
+        assert len(got) == k and set(got) == want, f"k={k}"
 
 
 def test_global_top_k_elision_no_window(spark):
-    """With a caller-known candidate count ≤ k, the flag is computed with
-    zero windows and zero sorts (the common late-crawl case)."""
+    """With a caller-known candidate count ≤ k, every row is returned
+    with zero windows and zero sorts (the common late-crawl case)."""
     import io
     from contextlib import redirect_stdout
 
-    from pyspark.sql import functions as F
-
-    from crawl4ai_spark.operators.politeness import flag_global_top_k, wave_order
+    from crawl4ai_spark.operators.politeness import global_top_k, wave_order
 
     df = spark.createDataFrame(
         [(f"http://a.com/{i}", i, "a.com", 0, 1.0, None, 0, "") for i in range(100)],
         "url string, url_fp long, host string, depth int, score double, "
         "parent_url string, enqueue_wave int, path_key string",
     )
-    flagged = flag_global_top_k(df, wave_order(), 1000, n_rows=100)
+    top = global_top_k(df, wave_order(), 1000, n_rows=100)
     buf = io.StringIO()
     with redirect_stdout(buf):
-        flagged.explain("formatted")
+        top.explain("formatted")
     plan = buf.getvalue()
     assert "Window" not in plan, plan
     assert "Sort" not in plan, plan
-    assert flagged.where(F.col("_topk")).count() == 100
+    assert top.count() == 100
 
 
 def test_merge_chunks_grouped_string_group_col(spark):
