@@ -351,7 +351,7 @@ def run_wave_overhead(n_pages: int = 1000, waves: int = 8, cores: int = 8) -> di
     steal = _steal_ticks() - s0
     store = WaveStore(spark, store_dir)
     committed = store.committed_waves()
-    walls = [float(store.read_scalar("metrics", w, "wall_sec") or 0.0) for w in committed]
+    walls = [float(store.marker(w)["meta"]["wall_sec"]) for w in committed]
     spark.stop()
     shutil.rmtree(store_dir, ignore_errors=True)
     # wave 1 pays one-time JVM/Python-UDF-worker/parquet-reader warm-up;

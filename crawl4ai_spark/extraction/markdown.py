@@ -195,11 +195,6 @@ def convert_links_to_citations(markdown: str, base_url: str = "") -> tuple[str, 
     return cited, refs
 
 
-def add_citations(raw_markdown: str, base_url: str = "") -> tuple[str, str]:
-    """Back-compat alias for :func:`convert_links_to_citations`."""
-    return convert_links_to_citations(raw_markdown, base_url)
-
-
 def generate_markdown_result(html: str, base_url: str = "") -> dict:
     """Full markdown stage output (struct mirrored in the Spark schema)."""
     raw = html_to_markdown(html, base_url)

@@ -56,9 +56,11 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from crawl4ai_spark.extraction.udfs import udf_full_extract
 from crawl4ai_spark.frontier.store import WaveStore
@@ -168,9 +170,14 @@ def _empty(spark: SparkSession, schema: str) -> DataFrame:
     return spark.range(0).select(*(F.lit(None).cast(f.dataType).alias(f.name) for f in fields))
 
 
+def _urls(spark: SparkSession, urls: list[str]) -> DataFrame:
+    """A ``url string`` frame of ``urls``, planned in the JVM from
+    literals (createDataFrame of a list runs a Python-RDD job)."""
+    return spark.range(1).select(F.explode(F.array(*map(F.lit, urls))).alias("url"))
+
+
 def _commit_wave(
     store: WaveStore,
-    spark: SparkSession,
     wave: int,
     kb_rows: DataFrame,
     link_rows: DataFrame,
@@ -204,7 +211,9 @@ def _commit_wave(
     # stats run over committed ∪ this wave's written delta
     prev_kb = store.read_table("kb")
     kb = prev_kb.unionByName(kb_delta) if prev_kb is not None else kb_delta
-    pages_crawled = (int(prev_kb.count()) if prev_kb is not None else 0) + n_new_docs
+    pages_crawled = n_new_docs + sum(
+        store.marker(w)["counts"].get("kb", 0) for w in store.committed_waves()
+    )
 
     if pages_crawled == 0:
         cov = cons = sat = conf = 0.0  # reference: empty KB → confidence 0.0
@@ -233,11 +242,8 @@ def _commit_wave(
         "saturation": sat,
         "confidence": conf,
     }
-    # one row of literals: a JVM-only job, no Python worker
-    metrics = spark.range(1, numPartitions=1).select(
-        *(F.lit(row[f.name]).cast(f.dataType).alias(f.name) for f in _METRICS_SCHEMA.fields)
-    )
-    store.write_table("metrics", wave, metrics)
+    metrics = pa.Table.from_pylist([row], to_arrow_schema(_METRICS_SCHEMA))
+    store.write_rows("metrics", wave, metrics)
     store.commit(wave, dict(meta, **row))
     return row
 
@@ -321,7 +327,7 @@ def adaptive_digest(
 
     ``resume=True`` re-enters a killed digest from its WaveStore exactly
     (the reference's ``resume_from`` state file): committed waves are
-    never redone, the metrics history reloads from the metrics table.
+    never redone, the metrics history reloads from the commit markers.
     """
     config = config or AdaptiveConfig()
     config.validate()
@@ -331,20 +337,16 @@ def adaptive_digest(
     if resume:
         store.recover()
     history: list[int] = []
-    crawl_order: list[str] = []
-    if resume and store.last_wave() is not None:
-        mdf = store.read_table("metrics")
-        if mdf is not None:
-            rows = sorted(mdf.collect(), key=lambda r: r.wave)
-            history = [r.new_terms for r in rows if r.new_terms is not None]
+    if resume:
+        metas = (store.marker(w)["meta"] for w in store.committed_waves())
+        history = [m["new_terms"] for m in metas if m["new_terms"] is not None]
 
     last_wave = store.last_wave()
     if last_wave is None:
         # initial crawl (:1368-1383)
-        seed_df = spark.createDataFrame([(start_url,)], "url string")
-        kb_rows, link_rows = _fetch_and_extract(pages, seed_df, 0)
+        kb_rows, link_rows = _fetch_and_extract(pages, _urls(spark, [start_url]), 0)
         row = _commit_wave(
-            store, spark, 0, kb_rows, link_rows, query_terms, config, history,
+            store, 0, kb_rows, link_rows, query_terms, config, history,
             meta={"kind": "adaptive_seed", "start_url": start_url, "query": query},
         )
         if row["n_new_docs"] > 0:
@@ -353,13 +355,13 @@ def adaptive_digest(
 
     stop_reason = "max_depth"
     while True:
-        m = store.read_table("metrics").where(F.col("wave") == last_wave).head()
+        m = store.marker(last_wave)["meta"]
         kb = store.read_table("kb")
         kb_urls = kb.select("url").distinct() if kb is not None else _empty(spark, "url string")
-        pages_crawled = int(m.pages_crawled)
+        pages_crawled = m["pages_crawled"]
 
         # should_stop, in the reference's exact order (:527-546)
-        if m.confidence >= config.confidence_threshold:
+        if m["confidence"] >= config.confidence_threshold:
             stop_reason = "confidence"
             break
         if pages_crawled >= config.max_pages:
@@ -377,7 +379,7 @@ def adaptive_digest(
         if pending_n == 0:
             stop_reason = "frontier_exhausted"
             break
-        if m.saturation >= config.saturation_threshold:
+        if m["saturation"] >= config.saturation_threshold:
             stop_reason = "saturation"
             break
 
@@ -397,11 +399,10 @@ def adaptive_digest(
             stop_reason = "min_gain"
             break
 
-        sel = spark.createDataFrame([(r.href,) for r in top], "url string")
         wave = last_wave + 1
-        kb_rows, link_rows = _fetch_and_extract(pages, sel, wave)
+        kb_rows, link_rows = _fetch_and_extract(pages, _urls(spark, [r.href for r in top]), wave)
         row = _commit_wave(
-            store, spark, wave, kb_rows, link_rows, query_terms, config, history,
+            store, wave, kb_rows, link_rows, query_terms, config, history,
             meta={
                 "kind": "adaptive_wave",
                 "selected": [r.href for r in top],
@@ -415,21 +416,20 @@ def adaptive_digest(
     kb = store.read_table("kb")
     if kb is None:
         kb = _empty(spark, _KB_SCHEMA)
-    metrics = store.read_table("metrics")
-    final = metrics.orderBy(F.desc("wave")).head()
+    final = store.marker(last_wave)["meta"]
     # convenience mirror of the reference's CrawlState.crawl_order —
     # bounded: beyond 10k pages read the kb table (wave column) instead
     crawl_order = (
         [r.url for r in kb.orderBy("wave", "url").collect()]
-        if int(final.pages_crawled) <= 10_000
+        if final["pages_crawled"] <= 10_000
         else []
     )
     return DigestResult(
         knowledge_base=kb,
-        metrics=metrics.orderBy("wave"),
-        confidence=float(final.confidence),
+        metrics=store.read_table("metrics").orderBy("wave"),
+        confidence=float(final["confidence"]),
         stop_reason=stop_reason,
-        pages_crawled=int(final.pages_crawled),
-        depth_reached=int(final.wave),
+        pages_crawled=final["pages_crawled"],
+        depth_reached=final["wave"],
         crawl_order=crawl_order,
     )

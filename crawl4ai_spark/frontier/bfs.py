@@ -22,8 +22,8 @@ The frames that live for the whole crawl are persisted at its start and
 filled on the loop's thread pool, so their jobs (the robots compile also
 starts the Python worker daemon) run while the driver plans the first
 wave. Every job is described ``wave=<w> phase=<p>`` (``prefetch.<frame>``,
-``step``, ``write.<table>``, ``bloom``, ``metrics``, ``reload``,
-``compact``).
+``step``, ``write.<table>``, ``bloom``, ``reload``, ``compact``); the
+metrics row and lineage are written on the driver, without a job.
 
 An unbanded crawl is a band of 1, and the band size picks the strategy.
 A band of 1 only persists its frames: the commit's results and
@@ -52,6 +52,7 @@ from dataclasses import dataclass, field
 from functools import reduce
 from typing import NamedTuple
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -110,10 +111,6 @@ class CrawlConfig:
     # (requires content_mode="scrape"; reference link-preview-driven
     # best-first). Takes effect only when no explicit scorer is set.
     score_from_links: bool = False
-    # fold each delta table's wave dirs into one sized snapshot when the
-    # crawl finishes (WaveStore.compact + vacuum) — a 10^4-wave crawl
-    # otherwise leaves 10^4 tiny parquet dirs per table. Post-loop only:
-    # vacuum deletes files a live wave's lazy plans may still reference.
     # content-level anti-bot detection (operators/antibot.py, the
     # reference antibot_detector.is_blocked ladder): fetched pages that
     # are challenge shells / block pages / structurally-empty renders take
@@ -121,6 +118,10 @@ class CrawlConfig:
     # host's RateLimiter backoff exactly like a 429 (the batch analogue of
     # the reference's detect → fallback-refetch flow)
     detect_blocked: bool = False
+    # fold each delta table's wave dirs into one sized snapshot when the
+    # crawl finishes (WaveStore.compact + vacuum) — a 10^4-wave crawl
+    # otherwise leaves 10^4 tiny parquet dirs per table. Post-loop only:
+    # vacuum deletes files a live wave's lazy plans may still reference.
     compact_on_finish: bool = False
     # fold the in-loop-read delta tables (frontier_delta, results,
     # seen_bloom) into one snapshot every K committed waves. The per-wave
@@ -733,8 +734,20 @@ def run_crawl(
         prefetch.append(pool.submit(_in_phase, sc, wave, f"prefetch.{name}", _fill_cache, df))
         return df
 
+    def work_left() -> bool:
+        """May another wave run? Within the caps, only while URLs are pending:
+        |pending| = frontier_total - total_attempted (attempted ⊆ frontier,
+        both unique by url_fp) once the first footer count lands. A crawl
+        with no work left plans, fills and stages nothing more."""
+        return (
+            steps_done < config.max_waves
+            and frontier_total != total_attempted
+            and (config.max_pages is None or total_attempted < config.max_pages)
+        )
+
     last = store.last_wave()
     summary = {"waves": [], "resumed_from": last}
+    state = None
     try:
         if last is None:
             wave = steps_done = total_attempted = 0
@@ -749,45 +762,38 @@ def run_crawl(
             state = _State(seed_delta, None, None, None)
         else:
             wave = last + 1
-            sc.setJobDescription(f"wave={wave} phase=reload")
-            state = _load_state(store, config)
             committed = store.committed_waves()
-            steps_done = sum(
-                int(store.marker(w).get("meta", {}).get("band_steps", 1)) for w in committed
-            )
-            scalars = (
-                [store.read_scalar("metrics", w, "n_attempted") for w in committed]
-                if all("metrics" in store.marker(w)["tables"] for w in committed)
-                else [None]
-            )
-            if any(s is None for s in scalars):
-                # a wave's metrics dir is gone (compacted+vacuumed store) or
-                # a wave predates the metrics table — recount, never assume 0
-                keys = state.attempted_keys
-                total_attempted = keys.count() if keys is not None else 0
-            else:
-                # per-wave n_attempted scalars from the metrics deltas —
-                # driver-side pyarrow reads, no Spark job on resume
-                total_attempted = sum(int(s) for s in scalars)
-            seed_delta = None
+            metas = [store.marker(w).get("meta", {}) for w in committed]
+            steps_done = sum(int(m.get("band_steps", 1)) for m in metas)
             frontier_total = sum(
                 store.marker(w)["counts"].get("frontier_delta", 0) for w in committed
             )
+            if all("n_attempted" in m for m in metas):
+                total_attempted = sum(m["n_attempted"] for m in metas)
+            else:
+                # a marker older than its metrics row: recount, never assume 0
+                sc.setJobDescription(f"wave={wave} phase=reload")
+                state = _load_state(store, config)
+                keys = state.attempted_keys
+                total_attempted = keys.count() if keys is not None else 0
+            seed_delta = None
         # the robots rules compile once per crawl (a Python UDF over the
         # host rows; every wave decides its URLs in the JVM). Each frame
         # holds one row per host (compile_robots keeps one), or a
         # listed-twice host's URLs would be selected twice by the wave's
         # broadcast joins
         rules = budgets = prior = None
-        if robots is not None:
-            rules = persist_and_fill("robots", compile_robots(robots, config.user_agent))
-        if host_budgets is not None:
-            budgets = persist_and_fill(
-                "host_budgets", host_budgets.groupBy("host").agg(F.min("budget").alias("budget"))
-            )
-        if config.host_prior is not None:
-            prior = persist_and_fill("host_prior", _per_host_prior(config.host_prior))
-        while steps_done < config.max_waves:
+        if work_left():
+            if robots is not None:
+                rules = persist_and_fill("robots", compile_robots(robots, config.user_agent))
+            if host_budgets is not None:
+                budgets = persist_and_fill(
+                    "host_budgets",
+                    host_budgets.groupBy("host").agg(F.min("budget").alias("budget")),
+                )
+            if config.host_prior is not None:
+                prior = persist_and_fill("host_prior", _per_host_prior(config.host_prior))
+        while work_left():
             if state is None:
                 sc.setJobDescription(f"wave={wave} phase=reload")
                 state = _load_state(store, config)
@@ -805,10 +811,9 @@ def run_crawl(
                     if remaining <= 0:
                         crawl_done = True
                         break
-                # |pending| from accumulated footer counts (attempted ⊆
-                # frontier, both unique by url_fp) — exact before a band's
-                # first step; lets the global cap elide its sort once
-                # pending fits the remaining budget
+                # |pending| is exact before a band's first step; lets the
+                # global cap elide its sort once pending fits the remaining
+                # budget
                 exact = frontier_total is not None and not band
                 hint = frontier_total - total_attempted if exact else None
                 step = _step(
@@ -867,7 +872,7 @@ def run_crawl(
 
             # bloom shards depend only on the already-written frontier
             # bytes — submit the build+write from the pool so it overlaps
-            # the (driver-side) lineage footer pass AND the metrics job
+            # the (driver-side) lineage and metrics writes
             f_bloom = None
             if config.use_bloom:
                 f_bloom = pool.submit(
@@ -881,20 +886,18 @@ def run_crawl(
             # pending (retried after the host cooldown) and don't burn
             # max_pages
             n_attempted = n_selected - n_throttled
-            # one row of literals: a JVM-only job (createDataFrame would
-            # ship the row through a Python worker, ~0.3 s per wave)
-            metrics = spark.range(1, numPartitions=1).select(
-                F.lit(wave).cast("long").alias("wave"),
-                F.lit(n_attempted).cast("long").alias("n_attempted"),
-                F.lit(n_throttled).cast("long").alias("n_throttled"),
-                F.lit(n_fresh).cast("long").alias("n_new_frontier"),
-                F.lit(time.time() - t0).alias("wall_sec"),
-            )
-            sc.setJobDescription(f"wave={wave} phase=metrics")
-            store.write_table("metrics", wave, metrics)
+            # Python ints and a float: arrow types the row long ×4, double
+            row = {
+                "wave": wave,
+                "n_attempted": n_attempted,
+                "n_throttled": n_throttled,
+                "n_new_frontier": n_fresh,
+                "wall_sec": time.time() - t0,
+            }
+            store.write_rows("metrics", wave, pa.Table.from_pylist([row]))
             if f_bloom is not None:
                 f_bloom.result()
-            marker = store.commit(wave, meta={"config": str(config), "band_steps": len(band)})
+            marker = store.commit(wave, {"config": str(config), "band_steps": len(band), **row})
             summary["waves"].append(marker["counts"] | {"wave": wave, "band_steps": len(band)})
 
             for s in band:

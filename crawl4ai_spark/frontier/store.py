@@ -24,6 +24,9 @@ Tables are **append-only deltas** keyed by wave:
   metrics        one row per wave: stage counts + wall time
   lineage        per-partition row counts for results + discoveries
 
+``write_rows`` writes metrics and lineage, which the driver holds, with
+pyarrow (no Spark job); the marker's ``meta`` carries the metrics row.
+
 Recovery invariant: a reader only ever sees waves with commit markers;
 a crashed wave K leaves orphan parquet dirs that the re-run of wave K
 overwrites (mode=overwrite keyed by wave id ⇒ idempotent exactly-once).
@@ -124,7 +127,6 @@ class WaveStore:
         produce no file, matching the old groupBy's absent groups)."""
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import from_arrow_schema
 
         src = self._staging_path(source, wave)
         if not os.path.exists(src):
@@ -148,12 +150,21 @@ class WaveStore:
                 "table": pa.array([source] * len(pids), pa.string()),
             }
         )
+        self.write_rows(name, wave, tbl)
+
+    def write_rows(self, name: str, wave: int, table) -> None:
+        """Stage a small table the driver already holds (a ``pyarrow.Table``:
+        lineage, a wave's metrics row) as one parquet file — no Spark job.
+        Its arrow types are the Spark types it reads back as."""
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_schema
+
         path = self._staging_path(name, wave)
         os.makedirs(path, exist_ok=True)
-        pq.write_table(tbl, os.path.join(path, "part-00000.parquet"))
-        self._pending.setdefault(wave, {})[name] = tbl.num_rows
+        pq.write_table(table, os.path.join(path, "part-00000.parquet"))
+        self._pending.setdefault(wave, {})[name] = table.num_rows
         # the schema Spark reads back (every field nullable), without a read
-        self._pending_schemas.setdefault(wave, {})[name] = from_arrow_schema(tbl.schema).json()
+        self._pending_schemas.setdefault(wave, {})[name] = from_arrow_schema(table.schema).json()
 
     def pending_count(self, wave: int, name: str) -> int:
         return self._pending.get(wave, {}).get(name, 0)
@@ -176,13 +187,6 @@ class WaveStore:
             if fname.endswith(".parquet")
             for v in pq.read_table(os.path.join(path, fname), columns=[column])[column].to_pylist()
         ]
-
-    def read_scalar(self, name: str, wave: int, column: str):
-        """The first non-null value of ``read_column`` (e.g. from the
-        one-row metrics delta), or None if the table is empty — or if the
-        per-wave dir no longer exists (callers must treat None as
-        "recompute", not zero)."""
-        return next((v for v in self.read_column(name, wave, column) or () if v is not None), None)
 
     def commit(self, wave: int, meta: dict | None = None) -> dict:
         """Atomically publish all tables written for this wave: rename

@@ -51,10 +51,6 @@ DEFAULT_PATTERNS: dict[str, str] = {
     "credit_card": r"\b(?:4\d{12}(?:\d{3})?|5[1-5]\d{14}|3[47]\d{13}|6(?:011|5\d{2})\d{12})\b",
 }
 
-# Back-compat alias (pre-catalog name used by earlier callers/tests).
-BUILTIN_PATTERNS = DEFAULT_PATTERNS
-
-
 def select_patterns(*labels: str, custom: dict[str, str] | None = None) -> dict[str, str]:
     """Subset of the built-in catalog by label, plus user overrides —
     mirrors the reference's IntFlag selection + ``custom`` merge."""

@@ -63,9 +63,7 @@ def run_leg(spark, pages_path, name: str, **cfg) -> dict:
     steal = _steal_ticks() - s0
     store = WaveStore(spark, store_dir)
     committed = store.committed_waves()
-    walls = [
-        float(store.read_scalar("metrics", w, "wall_sec") or 0.0) for w in committed
-    ]
+    walls = [float(store.marker(w)["meta"]["wall_sec"]) for w in committed]
     seen = {r.url for r in store.read_table("results").select("url").collect()}
     shutil.rmtree(store_dir, ignore_errors=True)
     steady = sorted(walls[1:]) if len(walls) > 1 else sorted(walls)

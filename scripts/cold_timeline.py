@@ -6,6 +6,7 @@ checks it against the benchmark oracle, and prints one line per Spark job
 of the crawl: its ``wave=<w> phase=<p>`` description and its submit and
 end offsets in seconds from the crawl's start, then per stage that ran
 the task count, the summed executor run time and the summed CPU time.
+The last line counts the crawl's jobs per ``phase=`` and in total.
 
 Usage (from the repository root):
 
@@ -20,7 +21,7 @@ import os
 import shutil
 import sys
 import tempfile
-from collections import defaultdict
+from collections import Counter, defaultdict
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path[:0] = [os.path.join(ROOT, "perfbench"), ROOT]
@@ -95,9 +96,8 @@ def main() -> int:
         f"wrong URLs {len(wrong)}/{len(expected.seen)}"
     )
     print(f"{'job':>4} {'submit':>8} {'end':>8}  description")
+    jobs = [job for job in jobs if t0 <= job["submit"] <= crawl_end]
     for job in jobs:
-        if job["submit"] < t0 or job["submit"] > crawl_end:
-            continue
         end = f"{job['end'] - t0:+8.2f}" if job["end"] is not None else f"{'-':>8}"
         print(f"{job['id']:>4} {job['submit'] - t0:+8.2f} {end}  {job['desc']}")
         for sid, st in job["stages"]:
@@ -105,6 +105,9 @@ def main() -> int:
                 f"{'':>24}stage {sid}: {st['tasks']} tasks, "
                 f"run {st['run_s']:.2f} s, cpu {st['cpu_s']:.2f} s"
             )
+    phases = Counter(job["desc"].partition("phase=")[2] or job["desc"] for job in jobs)
+    per_phase = ", ".join(f"{p} {n}" for p, n in sorted(phases.items()))
+    print(f"jobs: {per_phase}; total {len(jobs)}")
     return 0 if not wrong else 1
 
 

@@ -769,4 +769,6 @@ def test_crawl_jobs_carry_wave_and_phase(spark, site_dir, tmp_path):
         assert desc is not None and desc.startswith("wave="), (job_id, desc)
         phases.add(desc.split("phase=")[1])
     assert {"prefetch.seeds", "prefetch.robots", "prefetch.host_budgets"} <= phases
-    assert {"write.results", "write.host_state", "write.frontier_delta", "bloom", "metrics"} <= phases
+    assert {"write.results", "write.host_state", "write.frontier_delta", "bloom"} <= phases
+    # the metrics row is written on the driver, by no job
+    assert "metrics" not in phases

@@ -2,7 +2,7 @@
 byte-exact round-trip invariant over the synthetic corpus."""
 
 from crawl4ai_spark.extraction.links import extract_links
-from crawl4ai_spark.extraction.markdown import add_citations, html_to_markdown
+from crawl4ai_spark.extraction.markdown import convert_links_to_citations, html_to_markdown
 from crawl4ai_spark.extraction.meta import extract_head_meta, extract_lang
 from crawl4ai_spark.synth.pages import generate_site
 
@@ -74,7 +74,7 @@ def test_scripts_and_head_dropped():
 
 
 def test_citations():
-    cited, refs = add_citations("see [a](http://x.com/) and [b](http://y.com/) and [a2](http://x.com/)\n")
+    cited, refs = convert_links_to_citations("see [a](http://x.com/) and [b](http://y.com/) and [a2](http://x.com/)\n")
     assert cited == "see a⟨1⟩ and b⟨2⟩ and a2⟨1⟩\n"
     # reference semantics: header always present, desc = ": text"
     assert refs == "\n\n## References\n\n⟨1⟩ http://x.com/: a\n⟨2⟩ http://y.com/: b\n"
@@ -82,7 +82,7 @@ def test_citations():
 
 def test_citations_images_numbered_in_brackets():
     # reference: images become ![alt⟨n⟩] (src dropped) and ARE referenced
-    cited, refs = add_citations("![alt](http://x.com/i.png) and [a](http://y.com/)")
+    cited, refs = convert_links_to_citations("![alt](http://x.com/i.png) and [a](http://y.com/)")
     assert cited == "![alt⟨1⟩] and a⟨2⟩"
     assert "⟨1⟩ http://x.com/i.png: alt\n" in refs
     assert "⟨2⟩ http://y.com/: a\n" in refs

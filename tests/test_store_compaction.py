@@ -161,9 +161,10 @@ def test_vacuum_only_removes_folded_waves(spark, tmp_path):  # noqa: F811
     assert store.read_table("results").count() == 40
 
 
-def test_resume_survives_metrics_vacuum(spark, tmp_path):  # noqa: F811
-    """read_scalar returns None for vacuumed dirs and resume recounts
-    instead of crashing (or silently assuming 0 attempted)."""
+def test_resume_survives_metrics_vacuum(spark, tmp_path, monkeypatch):  # noqa: F811
+    """A resume of a store whose metrics dirs were compacted and vacuumed
+    takes total_attempted from the commit markers, never reads the
+    metrics table, and re-attempts nothing."""
     from crawl4ai_spark.frontier.bfs import CrawlConfig, run_crawl
     from crawl4ai_spark.synth.pages import generate_site, write_site_parquet
 
@@ -173,15 +174,23 @@ def test_resume_survives_metrics_vacuum(spark, tmp_path):  # noqa: F811
     seeds = pages.select("url").limit(2)
     store_dir = str(tmp_path / "crawl_store")
     cfg = CrawlConfig(max_depth=1, use_bloom=False)
-    run_crawl(spark, pages, seeds, store_dir, cfg)
+    first = run_crawl(spark, pages, seeds, store_dir, cfg)
 
     store = WaveStore(spark, store_dir)
     n_before = store.read_table("results").count()
     store.compact("metrics")
     store.vacuum("metrics")
-    assert store.read_scalar("metrics", 0, "n_attempted") is None
+    read = []
+    original = WaveStore.read_table
+    monkeypatch.setattr(
+        WaveStore,
+        "read_table",
+        lambda self, name, *a, **kw: read.append(name) or original(self, name, *a, **kw),
+    )
     # resume on the vacuumed store: no crash, nothing re-attempted
     summary = run_crawl(spark, pages, seeds, store_dir, cfg)
+    assert "metrics" not in read
+    assert summary["total_attempted"] == first["total_attempted"] == n_before
     assert WaveStore(spark, store_dir).read_table("results").count() == n_before
     assert summary["waves"] == [] or all(
         w.get("n_attempted", 0) == 0 for w in summary["waves"]
