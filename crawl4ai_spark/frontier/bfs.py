@@ -19,11 +19,11 @@ flagship loop:
         state   = reload(store)                     # _load_state
 
 The frames that live for the whole crawl are persisted at its start and
-filled on the loop's thread pool, so their jobs (the robots compile also
-starts the Python worker daemon) run while the driver plans the first
-wave. Every job is described ``wave=<w> phase=<p>`` (``prefetch.<frame>``,
-``step``, ``write.<table>``, ``bloom``, ``reload``, ``compact``); the
-metrics row and lineage are written on the driver, without a job.
+filled on the loop's thread pool, one job each, while the driver plans
+the first wave. Every job is described ``wave=<w> phase=<p>``
+(``prefetch.<frame>``, ``step``, ``extract``, ``write.<table>``,
+``bloom``, ``reload``, ``compact``); the metrics row and lineage are
+written on the driver, without a job.
 
 An unbanded crawl is a band of 1, and the band size picks the strategy.
 A band of 1 only persists its frames: the commit's results and
@@ -670,13 +670,14 @@ def _compact(store: WaveStore, tables: tuple[str, ...], vacuum: bool = False) ->
     return folded
 
 
-def _fill_cache(df: DataFrame) -> None:
-    """Fill the cache of the persisted ``df`` with one job over its cached
-    batches (``df.count()`` would plan an aggregation over the cache and
-    add two more jobs to the one that fills it)."""
+def _cached_batches(df: DataFrame):
+    """The RDD of cached batches of the persisted ``df``: counting it fills
+    the cache in one job (``df.count()`` would add two more). Building it
+    takes the cache builder's lock, which an adaptive plan holds while it
+    runs its query stages as jobs."""
     cache_manager = df.sparkSession._jsparkSession.sharedState().cacheManager()
     cached = cache_manager.lookupCachedData(df._jdf).get()
-    cached.cachedRepresentation().cacheBuilder().cachedColumnBuffers().count()
+    return cached.cachedRepresentation().cacheBuilder().cachedColumnBuffers()
 
 
 def _in_phase(sc, wave: int, phase: str, fn, *args):
@@ -695,7 +696,11 @@ def run_crawl(
     robots: DataFrame | None = None,
     host_budgets: DataFrame | None = None,
 ) -> dict:
-    """Run (or resume) a crawl to completion. Returns a summary dict."""
+    """Run (or resume) a crawl to completion. Returns a summary dict.
+
+    Around each crawl-lifetime ``persist()`` it sets the session's
+    ``spark.sql.adaptive.enabled`` to false: another thread querying the
+    session at that moment gets a non-adaptive plan."""
     config = config or CrawlConfig()
     mode = config.content_mode
     if mode not in ("links", "full", "scrape"):
@@ -727,11 +732,17 @@ def run_crawl(
     band: list[_Step] = []
 
     def persist_and_fill(name: str, df: DataFrame) -> DataFrame:
-        """Persist a frame that lives for the whole crawl and fill its
-        cache on the pool at once, so the job runs while the driver
-        builds the next frames and plans the first wave."""
-        lifetime[name] = df.persist()
-        prefetch.append(pool.submit(_in_phase, sc, wave, f"prefetch.{name}", _fill_cache, df))
+        """Persist a frame that lives for the whole crawl under a fixed
+        (non-adaptive) plan and fill its cache on the pool in one job that
+        holds no lock the driver waits on while it plans the first wave."""
+        aqe = spark.conf.get("spark.sql.adaptive.enabled")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            lifetime[name] = df.persist()
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        fill = lambda: _cached_batches(df).count()  # noqa: E731
+        prefetch.append(pool.submit(_in_phase, sc, wave, f"prefetch.{name}", fill))
         return df
 
     def work_left() -> bool:
@@ -753,9 +764,9 @@ def run_crawl(
             wave = steps_done = total_attempted = 0
             frontier_total = None  # unknown until the first footer count lands
             # wave 0 reuses the seed frontier three times (politeness
-            # pending, seen anti-join, frontier_delta union). It starts
-            # first: the robots compile is now the longest prefetch, but
-            # starting that one first measured no gain
+            # pending, seen anti-join, frontier_delta union). The robots
+            # compile is the longest prefetch; starting it first left the
+            # first write inside the run-to-run spread
             seed_delta = persist_and_fill(
                 "seeds", _prepare_seeds(seeds, need_path_keys=(config.strategy == "dfs"))
             )
@@ -787,9 +798,11 @@ def run_crawl(
             if robots is not None:
                 rules = persist_and_fill("robots", compile_robots(robots, config.user_agent))
             if host_budgets is not None:
+                # one task: a Python-backed frame forks one Python worker, not
+                # one per partition; a broadcast side fits on the driver anyway
                 budgets = persist_and_fill(
                     "host_budgets",
-                    host_budgets.groupBy("host").agg(F.min("budget").alias("budget")),
+                    host_budgets.coalesce(1).groupBy("host").agg(F.min("budget").alias("budget")),
                 )
             if config.host_prior is not None:
                 prior = persist_and_fill("host_prior", _per_host_prior(config.host_prior))
@@ -835,12 +848,17 @@ def run_crawl(
                 DataFrame.unionByName,
                 ([seed_delta] if seed_delta is not None else []) + [s.fresh for s in band],
             )
-            # in a band of 1 the writes are the first jobs to read the
+            # in a band of 1 the `work` build below is the first to read the
             # crawl-lifetime caches: wait until the prefetches have filled
-            # them, or each write would plan its own fill jobs; the first
-            # failed prefetch raises at once
+            # them, or it would plan its own fill jobs; the first failed
+            # prefetch raises at once
             for f in as_completed(prefetch):
                 f.result()
+            if not eager:
+                # build `work`'s cache here: its adaptive pre-stages run as `extract`
+                # jobs, not as whichever write's (a max_pages `_step` built it already)
+                sc.setJobDescription(f"wave={wave} phase=extract")
+                _cached_batches(band[0].work)
             # results and host_state depend only on the step frames: their
             # writes run in driver threads, overlapping the discover+frontier
             # job, so the wave costs max(), not sum(), of the three (per-block

@@ -8,9 +8,13 @@ end offsets in seconds from the crawl's start, then per stage that ran
 the task count, the summed executor run time and the summed CPU time.
 The last line counts the crawl's jobs per ``phase=`` and in total.
 
+With ``--warm`` a second crawl of the same inputs runs in the same JVM
+(Python workers, JIT and caches already started) and its timeline is
+printed too: the per-wave constant without the cold-start costs.
+
 Usage (from the repository root):
 
-    python scripts/cold_timeline.py --workload wide_crawl --seed 1
+    python scripts/cold_timeline.py --workload wide_crawl --seed 1 [--warm]
 """
 
 from __future__ import annotations
@@ -59,41 +63,12 @@ def read_jobs(path: str) -> list[dict]:
     return sorted(jobs.values(), key=lambda j: (j["submit"], j["id"]))
 
 
-def main() -> int:
-    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("--workload", required=True, choices=sorted(perfbench.WORKLOADS))
-    ap.add_argument("--seed", type=int, default=1)
-    args = ap.parse_args()
-    wl = perfbench.WORKLOADS[args.workload]
-
-    run_dir = tempfile.mkdtemp(prefix="cold_timeline-")
-    event_dir = os.path.join(run_dir, "eventlog")
-    os.makedirs(os.path.join(run_dir, "tmp"))
-    os.environ["TMPDIR"] = os.path.join(run_dir, "tmp")
-    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "local")
-    # the Python workers import the package from the checkout
-    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
-    try:
-        spark = perfbench.start_session(run_dir, event_dir)
-        site = perfbench.inputs.make_site(args.seed, wl.shape)
-        paths = perfbench.inputs.write_site(site, os.path.join(run_dir, "input"))
-        frames = perfbench.load_frames(spark, site, paths, wl.budget)
-        expected = perfbench.oracle.expected_crawl(
-            site, wl.budget, perfbench.MAX_DEPTH, wl.max_waves, wl.content_mode
-        )
-        rec = perfbench.crawl(spark, frames, wl, os.path.join(run_dir, "store"), wl.max_waves)
-        wrong = perfbench.check(rec, expected)
-        spark.stop()  # flushes the event log
-        perfbench.stop_jvm()
-        (log_file,) = [os.path.join(event_dir, f) for f in os.listdir(event_dir)]
-        jobs = read_jobs(log_file)
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
-
+def print_timeline(label: str, rec: dict, wrong: set, n_expected: int, jobs: list[dict]) -> None:
+    """One crawl's jobs, offsets from its start, and its per-phase job count."""
     t0, crawl_end = rec["bounds"][0][0], rec["bounds"][-1][1]
     print(
-        f"{args.workload} seed={args.seed}: {rec['attempted']} URLs in {rec['wall']:.2f} s, "
-        f"wrong URLs {len(wrong)}/{len(expected.seen)}"
+        f"{label}: {rec['attempted']} URLs in {rec['wall']:.2f} s, "
+        f"wrong URLs {len(wrong)}/{n_expected}"
     )
     print(f"{'job':>4} {'submit':>8} {'end':>8}  description")
     jobs = [job for job in jobs if t0 <= job["submit"] <= crawl_end]
@@ -108,7 +83,50 @@ def main() -> int:
     phases = Counter(job["desc"].partition("phase=")[2] or job["desc"] for job in jobs)
     per_phase = ", ".join(f"{p} {n}" for p, n in sorted(phases.items()))
     print(f"jobs: {per_phase}; total {len(jobs)}")
-    return 0 if not wrong else 1
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("--workload", required=True, choices=sorted(perfbench.WORKLOADS))
+    ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument(
+        "--warm", action="store_true", help="also run and print a second crawl in the same JVM"
+    )
+    args = ap.parse_args()
+    wl = perfbench.WORKLOADS[args.workload]
+
+    run_dir = tempfile.mkdtemp(prefix="cold_timeline-")
+    event_dir = os.path.join(run_dir, "eventlog")
+    os.makedirs(os.path.join(run_dir, "tmp"))
+    os.environ["TMPDIR"] = os.path.join(run_dir, "tmp")
+    os.environ["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "local")
+    # the Python workers import the package from the checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p)
+    crawls = []  # (label, crawl record, wrong URLs)
+    try:
+        spark = perfbench.start_session(run_dir, event_dir)
+        site = perfbench.inputs.make_site(args.seed, wl.shape)
+        paths = perfbench.inputs.write_site(site, os.path.join(run_dir, "input"))
+        frames = perfbench.load_frames(spark, site, paths, wl.budget)
+        expected = perfbench.oracle.expected_crawl(
+            site, wl.budget, perfbench.MAX_DEPTH, wl.max_waves, wl.content_mode
+        )
+        for label in ("cold", "warm") if args.warm else ("cold",):
+            store_dir = os.path.join(run_dir, f"store_{label}")
+            rec = perfbench.crawl(spark, frames, wl, store_dir, wl.max_waves)
+            crawls.append((label, rec, perfbench.check(rec, expected)))
+        spark.stop()  # flushes the event log
+        perfbench.stop_jvm()
+        (log_file,) = [os.path.join(event_dir, f) for f in os.listdir(event_dir)]
+        jobs = read_jobs(log_file)
+    finally:
+        shutil.rmtree(run_dir, ignore_errors=True)
+
+    for label, rec, wrong in crawls:
+        print_timeline(
+            f"{args.workload} seed={args.seed} {label}", rec, wrong, len(expected.seen), jobs
+        )
+    return 0 if not any(wrong for _, _, wrong in crawls) else 1
 
 
 if __name__ == "__main__":

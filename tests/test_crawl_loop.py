@@ -738,37 +738,136 @@ def test_failed_prefetch_surfaces_and_no_job_outlives_the_crawl(spark, site_dir,
     assert WaveStore(spark, store_dir).last_wave() is None
 
 
-def test_crawl_jobs_carry_wave_and_phase(spark, site_dir, tmp_path):
-    """Every job a crawl starts, on the driver thread or the pool, is
-    described ``wave=<w> phase=<p>``; the caller's description is
-    restored afterwards."""
-    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+def _described_jobs(spark, crawl) -> dict:
+    """``{job id: description}`` of every Spark job ``crawl()`` starts."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     before = set(tracker.getJobIdsForGroup(None))
-    sc.setJobDescription("caller")
-    try:
-        run_crawl(
-            spark, pages, seeds, str(tmp_path / "store_desc"),
-            CrawlConfig(max_depth=2, content_mode="links", n_bloom_shards=4),
-            robots=robots, host_budgets=budgets,
-        )
-        assert sc.getLocalProperty("spark.job.description") == "caller"
-    finally:
-        sc.setJobDescription(None)
+    crawl()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     descriptions = {}
     for job_id in set(tracker.getJobIdsForGroup(None)) - before:
-        job = sc._jsc.sc().statusStore().job(job_id)
-        desc = job.description()
+        desc = sc._jsc.sc().statusStore().job(job_id).description()
         descriptions[job_id] = desc.get() if desc.isDefined() else None
-    assert descriptions
-    phases = set()
-    for job_id, desc in descriptions.items():
-        assert desc is not None and desc.startswith("wave="), (job_id, desc)
-        phases.add(desc.split("phase=")[1])
+    return descriptions
+
+
+def test_crawl_jobs_carry_wave_and_phase(spark, site_dir, tmp_path):
+    """Every job a crawl starts, on the driver thread or the pool, is
+    described ``wave=<w> phase=<p>``; the caller's description is
+    restored afterwards. The adaptive pre-stage jobs of a wave's shared
+    ``work`` cache are described ``phase=extract``, not by whichever write
+    reaches the cache first, so two crawls of the same inputs count the
+    same jobs per wave and phase."""
+    from collections import Counter
+
+    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+    sc = spark.sparkContext
+
+    def crawl(store_dir):
+        sc.setJobDescription("caller")
+        try:
+            run_crawl(
+                spark, pages, seeds, store_dir,
+                CrawlConfig(max_depth=2, content_mode="links", n_bloom_shards=4),
+                robots=robots, host_budgets=budgets,
+            )
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+
+    counts = []
+    for run in range(2):
+        descriptions = _described_jobs(spark, lambda: crawl(str(tmp_path / f"store_desc{run}")))
+        assert descriptions
+        for job_id, desc in descriptions.items():
+            assert desc is not None and desc.startswith("wave="), (job_id, desc)
+        counts.append(Counter(descriptions.values()))
+    phases = {desc.split("phase=")[1] for desc in counts[0]}
     assert {"prefetch.seeds", "prefetch.robots", "prefetch.host_budgets"} <= phases
-    assert {"write.results", "write.host_state", "write.frontier_delta", "bloom"} <= phases
+    writes = {"write.results", "write.host_state", "write.frontier_delta", "bloom"}
+    assert {"extract"} | writes <= phases
     # the metrics row is written on the driver, by no job
     assert "metrics" not in phases
+    assert counts[0] == counts[1]
+
+
+def test_lifetime_frames_fill_in_one_job_without_adaptive_plans(
+    spark, site, site_dir, tmp_path, monkeypatch
+):
+    """Each crawl-lifetime frame (seeds, robots rules, budgets, prior) is
+    cached under a fixed plan and filled by exactly one job: an adaptive
+    cached plan runs its query stages as jobs inside the cache builder's
+    lock, where planning the first wave waits on them."""
+    from crawl4ai_spark.frontier import bfs
+
+    pages, seeds, robots, budgets = _inputs(spark, site_dir)
+    prior = spark.createDataFrame(
+        [(r["host"], 1.0) for r in site["host_budgets"]], "host string, prior double"
+    )
+    cached_plans = []
+    step = bfs._step
+
+    def recording_step(*args, **kwargs):
+        if not cached_plans:
+            entries = spark._jsparkSession.sharedState().cacheManager().cachedData()
+            for i in range(entries.size()):
+                plan = entries.apply(i).cachedRepresentation().cacheBuilder().cachedPlan()
+                cached_plans.append(plan.getClass().getSimpleName())
+        return step(*args, **kwargs)
+
+    monkeypatch.setattr(bfs, "_step", recording_step)
+    spark.catalog.clearCache()
+    descriptions = _described_jobs(
+        spark,
+        lambda: run_crawl(
+            spark, pages, seeds, str(tmp_path / "store_lifetime"),
+            CrawlConfig(max_depth=1, content_mode="links", n_bloom_shards=4, host_prior=prior),
+            robots=robots, host_budgets=budgets,
+        ),
+    )
+    prefetches = sorted(d for d in descriptions.values() if "phase=prefetch." in d)
+    frames = ("host_budgets", "host_prior", "robots", "seeds")
+    assert prefetches == [f"wave=0 phase=prefetch.{name}" for name in frames]
+    assert len(cached_plans) == 4 and "AdaptiveSparkPlanExec" not in cached_plans, cached_plans
+
+
+def test_host_budgets_read_in_one_task(spark, site, site_dir, tmp_path):
+    """A Python-backed ``host_budgets`` frame of several partitions is read
+    in one task (one Python worker, not one per partition), and the crawl
+    equals that of the same budgets in one partition."""
+    pages, seeds, robots, _ = _inputs(spark, site_dir)
+    budget_rows = [(r["host"], r["budget"]) for r in site["host_budgets"]]
+    # a host listed twice keeps its smallest budget
+    budget_rows.append((budget_rows[0][0], 2))
+    tracker = spark.sparkContext.statusTracker()
+
+    def crawl(n_partitions: int):
+        budgets = spark.createDataFrame(budget_rows, "host string, budget int").coalesce(
+            n_partitions
+        )
+        assert budgets.rdd.getNumPartitions() == n_partitions
+        store_dir = str(tmp_path / f"store_parts{n_partitions}")
+        config = CrawlConfig(max_depth=2, content_mode="links", n_bloom_shards=4)
+        descriptions = _described_jobs(
+            spark,
+            lambda: run_crawl(
+                spark, pages, seeds, store_dir, config, robots=robots, host_budgets=budgets
+            ),
+        )
+        (job_id,) = [
+            job_id for job_id, desc in descriptions.items()
+            if desc.endswith("prefetch.host_budgets")
+        ]
+        first_stage = min(tracker.getJobInfo(job_id).stageIds)
+        assert tracker.getStageInfo(first_stage).numTasks == 1
+        results = WaveStore(spark, store_dir).read_table("results").collect()
+        seen = WaveStore(spark, store_dir).read_table("frontier_delta").select("url").collect()
+        return (
+            {r.url for r in results if r.status != "throttled"},
+            {r.url for r in results if r.status == "fetched"},
+            {r.url for r in seen},
+        )
+
+    assert crawl(4) == crawl(1)
